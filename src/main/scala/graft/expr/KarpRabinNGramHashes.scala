@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * of an `array<string>` column in ONE code-point walk — the
   * [[TokenGramHashes]] move applied to the REPLAYABLE hash family, for
   * the oracled HLL distinct-n surrogate
-  * (`TextStats.distinctNgramRatioApproxKR`).
+  * (`TextStats.distinctNgramRatioApprox`).
   *
   * Each emitted value is BIT-IDENTICAL to
   * `KarpRabinHash.compute(gram tokens joined by a single space)` — the
@@ -28,13 +28,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * re-hash (chars walked 1+2+3 = 6× for maxN = 3) — collapses to a
   * map-only projection with ONE char walk and no window exchange/sort.
   *
-  * Token conventions mirror the window path exactly: zero-length tokens
-  * are skipped (the posexplode path's `length(t) > 0` filter — grams
-  * slide over the SUBSEQUENCE of non-empty tokens), a null element is
-  * treated as empty (tokenizers here never produce one, but an
-  * expression must not crash), a null array propagates null (explode
-  * then emits nothing, like posexplode of null), and for L surviving
-  * tokens each n emits max(L−n+1, 0) grams.
+  * Token conventions match [[TokenNGrams]]: zero-length tokens are
+  * skipped (grams slide over the SUBSEQUENCE of non-empty tokens), a
+  * null element is treated as empty (tokenizers here never produce one,
+  * but an expression must not crash), a null array propagates null
+  * (explode then emits nothing), and for L surviving tokens each n
+  * emits max(L−n+1, 0) grams.
   *
   * Output packs (n, hash) into one long — `n << 32 | hash` — because
   * hash < 10^9+7 < 2^32; consumers recover n = value >> 32 and

@@ -15,11 +15,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * hash surrogate) is the aggregation key, so the corpus-wide
   * distinct-count contract demands the actual string.
   *
-  * Each emitted gram is BIT-IDENTICAL to the lead-window path's
-  * `concat_ws(" ", t, t1, …)`: the single-space join of n consecutive
-  * non-empty tokens. Token conventions mirror that path exactly —
-  * zero-length tokens are skipped (its `length(t) > 0` filter; grams
-  * slide over the SUBSEQUENCE of survivors), a null element is treated
+  * Each emitted gram is BIT-IDENTICAL to `concat_ws(" ", t, t1, …)`:
+  * the single-space join of n consecutive non-empty tokens, the string
+  * the oracle SQL builds. Token conventions: zero-length tokens are
+  * skipped (grams slide over the SUBSEQUENCE of survivors — a
+  * whitespace-only doc has no grams), a null element is treated
   * as empty (tokenizers here never produce one, but an expression must
   * not crash), a null array propagates null (explode then emits
   * nothing), and for L surviving tokens each n emits max(L−n+1, 0)

@@ -86,12 +86,17 @@ object Dsir {
     def counts(corpus: DataFrame): DataFrame =
       graft.core.Ckpt.pin(gramBuckets(corpus, idCol, textCol, buckets)
         .groupBy("bucket").agg(count(lit(1)).as("c")))
-    val ct = counts(target)
-    val cr = counts(raw)
+    logRatios(counts(target), counts(raw), buckets, smoothing)
+  }
+
+  /** The (bucket, log_ratio) table of [[trainImportanceRatios]] from the
+    * target and raw (bucket, c) count tables: every bucket row, each
+    * corpus total collected as a 1-row aggregate. */
+  private def logRatios(ct: DataFrame, cr: DataFrame, buckets: Int,
+      smoothing: Double): DataFrame = {
     val tT = ct.agg(coalesce(sum("c"), lit(0L))).head().getLong(0)
     val tR = cr.agg(coalesce(sum("c"), lit(0L))).head().getLong(0)
-    val all = target.sparkSession.range(buckets).select(col("id").as("bucket"))
-    all
+    ct.sparkSession.range(buckets).select(col("id").as("bucket"))
       .join(ct.withColumnRenamed("c", "ct"), Seq("bucket"), "left")
       .join(cr.withColumnRenamed("c", "cr"), Seq("bucket"), "left")
       .select(col("bucket"),
@@ -128,19 +133,8 @@ object Dsir {
         carryCols = Seq("__tgt")))
     def counts(g: DataFrame): DataFrame =
       graft.core.Ckpt.pin(g.groupBy("bucket").agg(count(lit(1)).as("c")))
-    val ct = counts(grams.filter(col("__tgt")))
-    val cr = counts(grams)
-    val tT = ct.agg(coalesce(sum("c"), lit(0L))).head().getLong(0)
-    val tR = cr.agg(coalesce(sum("c"), lit(0L))).head().getLong(0)
-    val all = raw.sparkSession.range(buckets).select(col("id").as("bucket"))
-    val ratios = all
-      .join(ct.withColumnRenamed("c", "ct"), Seq("bucket"), "left")
-      .join(cr.withColumnRenamed("c", "cr"), Seq("bucket"), "left")
-      .select(col("bucket"),
-        (log((coalesce(col("ct"), lit(0L)) + lit(smoothing)) /
-          lit(tT + smoothing * buckets)) -
-         log((coalesce(col("cr"), lit(0L)) + lit(smoothing)) /
-          lit(tR + smoothing * buckets))).as("log_ratio"))
+    val ratios = logRatios(counts(grams.filter(col("__tgt"))), counts(grams),
+      buckets, smoothing)
     grams
       .join(broadcast(ratios), "bucket")
       .groupBy("doc_id")

@@ -119,7 +119,7 @@ object Packing {
     val w = Window.partitionBy("doc_id").orderBy("pos")
     val tokHashes = (gramTokens - 1 to 1 by -1)
       .map(j => lag(col("__th"), j).over(w)) :+ col("__th")
-    val gramHash = tokHashes.reduceLeft((acc, c) =>
+    val gramKr = tokHashes.reduceLeft((acc, c) =>
       (acc * lit(257L) + c) % lit(1000000007L))
     docs.filter(col(textCol).isNotNull)
       .select(col(idCol).as("doc_id"),
@@ -127,7 +127,7 @@ object Packing {
       .withColumn("__th", TextStats.rollingHash(col("tok")))
       .withColumn("__b",
         when(col("pos") >= gramTokens - 1 &&
-          pmod(gramHash, lit(divisor.toLong)) === 0, 1L)
+          pmod(gramKr, lit(divisor.toLong)) === 0, 1L)
           .otherwise(0L))
       .withColumn("chunk_id", coalesce(
         sum("__b").over(w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))

@@ -158,90 +158,48 @@ object TextStats {
     *   - `n_tokens` for downstream thresholds. Both fractions are 0.0 for
     *     docs too short to form the n-gram.
     *
-    * Shape: posexplode → doc-keyed window `lead` builds the grams (NOT a
-    * `transform` lambda over the token array — Catalyst inlines the
-    * derived-array expression per element, going quadratic in doc length;
-    * see the winnowing op), then (doc, gram) partial-agg counts. Every
-    * shuffle is doc/gram-keyed — parallelism scales with the corpus, no
-    * per-doc state beyond the aggregation row. Tokenization is the dedup
-    * family's `split(lower(trim(text)), "\\s+")`, so repetition thresholds
+    * Shape: a projection — no shuffle at all. Every stat is per-doc, so
+    * one native [[graft.expr.TokenGramHashes]] pass per gram order gives
+    * each doc's 64-bit gram keys: distinct counts read `array_distinct`,
+    * and the top-bigram multiplicity is the longest run of the SORTED
+    * key array, a linear fold whose first argument is evaluated once per
+    * row (an argument expression, not the per-element lambda-capture
+    * trap). Hashing only relabels the grams, so every fraction equals
+    * the string-gram value absent a per-doc ~2⁻⁶⁴ FNV collision
+    * (TextExtSpec checks it against a plain-Scala string reference).
+    * Projections are staged so the tokenizer and each gram pass evaluate
+    * once (PlanLint). Tokenization is the dedup family's
+    * `split(lower(trim(text)), "\\s+")` with empty tokens KEPT (a
+    * whitespace-only doc is one empty token), so repetition thresholds
     * compose with the minhash/simhash pipeline unchanged. */
   def repetitionStats(
       docs: org.apache.spark.sql.DataFrame,
       idCol: String = "doc_id",
-      textCol: String = "text",
-      hashKeys: Boolean = false): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+      textCol: String = "text"): org.apache.spark.sql.DataFrame = {
     val base = docs.select(col(idCol).as("doc_id"), Dedup.tokens(col(textCol)).as("toks"))
-    if (hashKeys) {
-      // ZERO-shuffle form (r14, the TokenGramHashes move): every stat is
-      // per-doc, so with native gram-hash arrays the whole computation is
-      // a projection — no posexplode, no (doc, pos) window sort, no
-      // gram-keyed groupBy, no pivot, no join-back. distinct counts and
-      // the top-bigram multiplicity read the hash arrays (a pure
-      // relabeling — values identical to the string grams absent a
-      // per-doc ~2⁻⁶⁴ collision; TextExtSpec pins the equivalence and
-      // the exact-string oracle stays valid). Max multiplicity = longest
-      // run of the SORTED hash array, a linear fold whose first argument
-      // is evaluated once per row (an argument expression, not the
-      // round-7 per-element lambda-capture trap). Projections are staged
-      // so the tokenizer and each gram pass evaluate once (PlanLint).
-      def maxRun(g: Column): Column =
-        aggregate(array_sort(g),
-          struct(lit(0L).as("prev"), lit(0L).as("run"), lit(0L).as("mx")),
-          (acc, x) => {
-            val nrun = when(acc.getField("run") > 0 && x === acc.getField("prev"),
-              acc.getField("run") + lit(1L)).otherwise(lit(1L))
-            struct(x.as("prev"), nrun.as("run"),
-              greatest(acc.getField("mx"), nrun).as("mx"))
-          },
-          acc => acc.getField("mx"))
-      val arr = base.select(col("doc_id"), size(col("toks")).as("n_tokens"),
-        graft.expr.TokenGramHashes.tokenGramHashes(col("toks"), 2).as("g2"),
-        graft.expr.TokenGramHashes.tokenGramHashes(col("toks"), 3).as("g3"))
-      val stats = arr.select(col("doc_id"), col("n_tokens"),
-        size(col("g3")).as("t_n"), size(array_distinct(col("g3"))).as("t_d"),
-        size(col("g2")).as("b_n"), maxRun(col("g2")).as("b_mx"))
-      return stats.select(col("doc_id"), col("n_tokens"),
-        when(col("t_n").isNull || col("t_n") === 0, 0.0)
-          .otherwise((col("t_n") - col("t_d")).cast("double") / col("t_n"))
-          .as("dup_trigram_frac"),
-        when(col("b_n").isNull || col("b_n") === 0, 0.0)
-          .otherwise(col("b_mx").cast("double") / col("b_n"))
-          .as("top_bigram_frac"))
-    }
-    val tok = base.select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "t")))
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    // both gram kinds from ONE window pass: a union of two filtered
-    // branches would duplicate the posexplode+window subtree (plan audit
-    // showed the scan and window evaluated twice); explode a 2-struct
-    // array instead and drop the null (end-of-doc) grams after
-    val g = tok
-      .withColumn("t1", lead("t", 1).over(w))
-      .withColumn("t2", lead("t", 2).over(w))
-      .select(col("doc_id"), explode(array(
-        struct(lit("b").as("k"),
-          when(col("t1").isNotNull, concat_ws(" ", col("t"), col("t1"))).as("gram")),
-        struct(lit("t").as("k"),
-          when(col("t2").isNotNull,
-            concat_ws(" ", col("t"), col("t1"), col("t2"))).as("gram")))).as("kg"))
-      .select(col("doc_id"), col("kg.k").as("k"), col("kg.gram").as("gram"))
-      .filter(col("gram").isNotNull)
-    val per = g
-      .groupBy("doc_id", "k", "gram").agg(count(lit(1)).as("c"))
-      .groupBy("doc_id", "k")
-      .agg(sum("c").as("n"), count(lit(1)).as("d"), max("c").as("mx"))
-    val wide = per.groupBy("doc_id").pivot("k", Seq("b", "t"))
-      .agg(first("n").as("n"), first("d").as("d"), first("mx").as("mx"))
-    base.select(col("doc_id"), size(col("toks")).as("n_tokens"))
-      .join(wide, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_tokens"),
-        when(col("t_n").isNull || col("t_n") === 0, 0.0)
-          .otherwise((col("t_n") - col("t_d")).cast("double") / col("t_n"))
-          .as("dup_trigram_frac"),
-        when(col("b_n").isNull || col("b_n") === 0, 0.0)
-          .otherwise(col("b_mx").cast("double") / col("b_n"))
-          .as("top_bigram_frac"))
+    def maxRun(g: Column): Column =
+      aggregate(array_sort(g),
+        struct(lit(0L).as("prev"), lit(0L).as("run"), lit(0L).as("mx")),
+        (acc, x) => {
+          val nrun = when(acc.getField("run") > 0 && x === acc.getField("prev"),
+            acc.getField("run") + lit(1L)).otherwise(lit(1L))
+          struct(x.as("prev"), nrun.as("run"),
+            greatest(acc.getField("mx"), nrun).as("mx"))
+        },
+        acc => acc.getField("mx"))
+    val arr = base.select(col("doc_id"), size(col("toks")).as("n_tokens"),
+      graft.expr.TokenGramHashes.tokenGramHashes(col("toks"), 2).as("g2"),
+      graft.expr.TokenGramHashes.tokenGramHashes(col("toks"), 3).as("g3"))
+    val stats = arr.select(col("doc_id"), col("n_tokens"),
+      size(col("g3")).as("t_n"), size(array_distinct(col("g3"))).as("t_d"),
+      size(col("g2")).as("b_n"), maxRun(col("g2")).as("b_mx"))
+    stats.select(col("doc_id"), col("n_tokens"),
+      when(col("t_n").isNull || col("t_n") === 0, 0.0)
+        .otherwise((col("t_n") - col("t_d")).cast("double") / col("t_n"))
+        .as("dup_trigram_frac"),
+      when(col("b_n").isNull || col("b_n") === 0, 0.0)
+        .otherwise(col("b_mx").cast("double") / col("b_n"))
+        .as("top_bigram_frac"))
   }
 
   /** Corpus diversity: distinct-n ratios (Li et al. 2016's "distinct"
@@ -251,65 +209,20 @@ object TextStats {
     * boilerplate/template dominance in scraped ones; distinct-1 is the
     * classic type–token ratio.
     *
-    * Shape: ONE posexplode + doc-keyed window pass builds all three gram
-    * streams (the repetitionStats recipe — leads, not a `transform`
-    * lambda over the derived token array, which Catalyst inlines per
-    * element and goes quadratic), then a (group, n, gram) partial-agg
-    * count and a (group, n) rollup. The gram-keyed exchange is the one
-    * corpus-wide shuffle — the same shuffle any EXACT distinct pays;
-    * at the 100 TB tier swap the exact count for the mergeable HLL
-    * sketch ([[graft.ext.Sketches]]) when ±2% suffices. Groups with no
+    * Shape: ONE [[graft.expr.TokenNGrams]] walk over each doc's token
+    * array emits every (n, gram) STRING — the single-space join of n
+    * consecutive non-empty tokens (an empty/whitespace-only doc splits to
+    * [""], whose phantom '' unigram is skipped so totals count real
+    * tokens only — the rouge/chrf empty-token convention, mirrored with
+    * list_filter in the oracle). The gram stream is map-only until the
+    * (group, n, gram) partial-agg count and the (group, n) rollup: no
+    * window exchange, no per-doc sort. The gram-keyed exchange is the one
+    * corpus-wide shuffle — the same shuffle any EXACT distinct pays; at
+    * the 100 TB tier swap the exact count for the mergeable HLL sketch
+    * ([[distinctNgramRatioApprox]]) when ±2% suffices. Groups with no
     * n-gram of some order (every doc shorter than n tokens) emit no row
     * for that order. */
   def distinctNgramRatio(
-      docs: org.apache.spark.sql.DataFrame,
-      groupCol: String = "lang",
-      idCol: String = "doc_id",
-      textCol: String = "text"): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val base = docs.select(col(groupCol).cast("string").as("group"),
-      col(idCol).as("doc_id"), Dedup.tokens(col(textCol)).as("toks"))
-    val tok = base.select(col("group"), col("doc_id"),
-      posexplode(col("toks")).as(Seq("pos", "t")))
-      // an empty/whitespace-only doc splits to [""] — drop the phantom ''
-      // unigram so totals count real tokens only (the rouge/chrf empty-token
-      // convention; mirrored with list_filter in the oracle)
-      .filter(length(col("t")) > 0)
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    val g = tok
-      .withColumn("t1", lead("t", 1).over(w))
-      .withColumn("t2", lead("t", 2).over(w))
-      .select(col("group"), explode(array(
-        struct(lit(1).as("n"), col("t").as("gram")),
-        struct(lit(2).as("n"),
-          when(col("t1").isNotNull, concat_ws(" ", col("t"), col("t1"))).as("gram")),
-        struct(lit(3).as("n"),
-          when(col("t2").isNotNull,
-            concat_ws(" ", col("t"), col("t1"), col("t2"))).as("gram")))).as("ng"))
-      .select(col("group"), col("ng.n").as("n"), col("ng.gram").as("gram"))
-      .filter(col("gram").isNotNull)
-    g.groupBy("group", "n", "gram").agg(count(lit(1)).as("c"))
-      .groupBy("group", "n")
-      .agg(sum("c").as("total_ngrams"), count(lit(1)).as("distinct_ngrams"))
-      .select(col("group"), col("n"), col("total_ngrams"), col("distinct_ngrams"),
-        (col("distinct_ngrams").cast("double") / col("total_ngrams"))
-          .as("distinct_ratio"))
-      .orderBy("group", "n")
-  }
-
-  /** The zero-window twin of [[distinctNgramRatio]] (a private[graft]
-    * optimization entry point, the distinctNgramRatioApproxKR pattern):
-    * identical output, but the (n, gram) stream comes from ONE
-    * [[graft.expr.TokenNGrams]] walk over each doc's token array instead
-    * of posexplode → doc-keyed sort → lead window → concat_ws. The grams
-    * are the same STRINGS by construction (single-space join of n
-    * consecutive non-empty tokens — TokenGramExprSpec pins the kernel,
-    * TextExtSpec pins this path row-exact against the window path), so
-    * every (group, n, gram) count long, both aggregate longs, and the
-    * long/long ratio division are bit-identical. The doc-keyed window
-    * exchange and per-doc sort disappear: the gram stream is map-only
-    * until the (group, n, gram) aggregate. */
-  private[graft] def distinctNgramRatioFused(
       docs: org.apache.spark.sql.DataFrame,
       groupCol: String = "lang",
       textCol: String = "text"): org.apache.spark.sql.DataFrame = {
@@ -349,77 +262,21 @@ object TextStats {
     * scale). TextExtSpec pins the relative error against the exact path
     * on the fixture corpus.
     *
-    * `gramHash` is the injection seam (the simhashCore pattern, applied
-    * here r14): everything downstream of the per-gram 64-bit surrogate —
-    * bucket routing, bin()-bitlen ranks, register max/merge, the harmonic
-    * estimator and its linear-counting branch — is shared replayable
-    * arithmetic; only the raw draw varies. Production feeds xxhash64
-    * (engine-specific by construction); the driver query feeds
-    * [[rollingHash]], whose Karp–Rabin fold an ANSI SQL engine
-    * regenerates exactly, which is what lets q_distinct_ngrams_approx_docs
-    * hard-oracle the SKETCH itself — registers, estimator and all — not
-    * just bound its error. */
+    * Gram surrogate: each gram enters the sketch as its Karp–Rabin hash
+    * ([[rollingHash]]'s fold `h ← (h·257 + codePoint) mod P` over the
+    * space-joined gram string, P = 10⁹+7), computed by ONE
+    * [[graft.expr.KarpRabinNGramHashes]] walk per doc — no gram string is
+    * built. Distinct grams that share a surrogate merge before the
+    * sketch: in a value space of P that drops about n/(2P) of n distinct
+    * grams — ~0.05% at a million distinct grams per (group, n), about
+    * 2.1× the ~0.02% of the 2³¹-folded xxhash64 draw this operator used
+    * to take, and still far inside the sketch's own 1.04/√2^b error.
+    * What the surrogate buys: an ANSI SQL engine regenerates the fold
+    * exactly, so q_distinct_ngrams_approx_docs hard-oracles the SKETCH
+    * itself — every gram hash, bucket, bin()-bitlen rank, register, the
+    * harmonic estimator and its linear-counting branch — not just its
+    * error bound. Empty tokens are skipped, as in the exact path. */
   def distinctNgramRatioApprox(
-      docs: org.apache.spark.sql.DataFrame,
-      groupCol: String = "lang",
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      b: Int = 12,
-      gramHash: Column => Column = xxhash64(_)): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(b >= 4 && b <= 16, s"b must be in [4,16], got $b")
-    val base = docs.select(col(groupCol).cast("string").as("group"),
-      col(idCol).as("doc_id"), Dedup.tokens(col(textCol)).as("toks"))
-    val tok = base.select(col("group"), col("doc_id"),
-      posexplode(col("toks")).as(Seq("pos", "t")))
-      .filter(length(col("t")) > 0) // the exact path's empty-token convention
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    val g = tok
-      .withColumn("t1", lead("t", 1).over(w))
-      .withColumn("t2", lead("t", 2).over(w))
-      .select(col("group"), explode(array(
-        struct(lit(1).as("n"), col("t").as("gram")),
-        struct(lit(2).as("n"),
-          when(col("t1").isNotNull, concat_ws(" ", col("t"), col("t1"))).as("gram")),
-        struct(lit(3).as("n"),
-          when(col("t2").isNotNull,
-            concat_ws(" ", col("t"), col("t1"), col("t2"))).as("gram")))).as("ng"))
-      .select(col("group"), col("ng.n").as("n"), col("ng.gram").as("gram"))
-      .filter(col("gram").isNotNull)
-    // mixHash is numeric (kept replayable for the oracled sketch queries);
-    // grams enter through the gramHash surrogate — its 2^31 folded space
-    // adds ~n²/2³² phantom collisions (0.02% at a million grams), far
-    // inside the sketch's own 1.04/√2^b error. The EXACT path stays the
-    // accuracy oracle; the injected-hash driver query hard-oracles the
-    // sketch mechanism itself. The surrogate gets its OWN projection
-    // (the simhashCore addHash staging): hllBucketRank references its
-    // input three times (bucket + the two w reads in the rank CASE), and
-    // CollapseProject keeps a non-cheap alias referenced that often
-    // staged — so a per-character fold like the replayable rollingHash
-    // is evaluated once per gram, and only mixHash's O(1) integer
-    // arithmetic is triplicated (the accepted hll/kmv-query shape).
-    val hashed = g.select(col("group"), col("n"), gramHash(col("gram")).as("gh"))
-    hllNgramTail(hashed, b)
-  }
-
-  /** The Karp–Rabin-fused twin of [[distinctNgramRatioApprox]] (a
-    * private[graft] optimization entry point, the dsirScoresSelfTrained
-    * pattern): identical output for `gramHash = rollingHash`, but the
-    * gram surrogates come from ONE
-    * [[graft.expr.KarpRabinNGramHashes]] walk over each doc's token
-    * array instead of posexplode → doc-keyed sort → lead window →
-    * concat_ws → per-char re-hash. Equivalence is compositional modular
-    * arithmetic, machine-checked by TextExtSpec (bit-equality against
-    * the window path on a fixture with empties/unicode/short docs):
-    *
-    *   KR(a ⧺ " " ⧺ b) = (KR(a) · 257^(cp(b)+1) + KR(" " ⧺ b)) mod P
-    *
-    * so every (n, gh) pair — and therefore every bucket, rank, register
-    * and estimator read-out — is identical. The doc-keyed window
-    * exchange disappears: the gram stream is map-only until the
-    * (group, n, bucket) partial aggregate, which is the shape the 100 TB
-    * tier wants (constant sketch state, no corpus-wide sort). */
-  private[graft] def distinctNgramRatioApproxKR(
       docs: org.apache.spark.sql.DataFrame,
       groupCol: String = "lang",
       textCol: String = "text",
@@ -435,14 +292,8 @@ object TextStats {
       .select(col("group"),
         shiftright(col("pk"), 32).cast("int").as("n"),
         col("pk").bitwiseAND(lit(0xffffffffL)).as("gh"))
-    hllNgramTail(hashed, b)
-  }
-
-  /** Shared HLL register/estimator tail of the approx distinct-n pair:
-    * (group, n, gh) → (group, n, bucket) register maxima → harmonic-mean
-    * estimate with the linear-counting branch. */
-  private def hllNgramTail(
-      hashed: org.apache.spark.sql.DataFrame, b: Int): org.apache.spark.sql.DataFrame = {
+    // HLL tail: (group, n, bucket) register maxima → harmonic-mean
+    // estimate with the linear-counting branch
     val (bucket, rank) = Sketches.hllBucketRank(col("gh"), b)
     val regs = hashed
       .select(col("group"), col("n"), bucket.as("bucket"), rank.as("rank"))
@@ -635,33 +486,27 @@ object TextStats {
     * absolute discount D = n₁/(n₁+2n₂) estimated from the counts of
     * counts. All frames are gram-keyed aggregates of the bigram type
     * table (corpus-sized shuffles only at training, model-sized at
-    * scoring). */
+    * scoring). Words are keyed by their 64-bit token hash
+    * ([[graft.expr.TokenGramHashes]], k = 1), not by the token string:
+    * `w1`/`w2` are longs, and only [[kneserNeyLogLikelihood]] reads them. */
   final case class KnModel(bi: DataFrame, ctx: DataFrame, cont: DataFrame,
       bigramTypes: Long, vocab: Long, discount: Double)
 
   /** Train the interpolated Kneser–Ney bigram model on a reference
     * corpus. One corpus scan builds the bigram type table (Ckpt-pinned —
-    * four consumers would each replay the token window otherwise); the
+    * four consumers would each replay the token scan otherwise); the
     * context frame (c1 = Σc12, n1fwd = distinct continuations of w1),
     * the continuation frame (n1bwd = distinct contexts preceding w2), and
     * the scalar row (B, n₁, n₂) are all model-sized rollups of it. The
     * discount falls back to the standard 0.75 iff n₁+2n₂ = 0 (no
     * singleton or doubleton bigram types — the Ney estimator is 0/0
     * there); the fallback is replayed as a CASE in the oracle. */
-  def trainKneserNeyModel(corpus: DataFrame,
-      textCol: String = "text", hashKeys: Boolean = false): KnModel = {
-    // positions frame, one row per token: (w1, w2 = the next token or
-    // null). The string path window-leads over per-doc positions; the
-    // hashKeys path (the corpus-scale driver shape, under the bleu2/
-    // rouge2 r14 relabeling contract: pure key relabeling, identical
-    // counts absent a 64-bit FNV collision, spec-pinned equivalence)
-    // zips one native TokenGramHashes pass against its own 1-shifted
-    // slice — arrays_zip pads the shorter slice with null exactly where
-    // lead(1) is null — so the per-doc window SHUFFLE disappears and
-    // every downstream shuffle carries 8-byte keys instead of token
-    // strings. Train and score must agree on hashKeys: the model frames
-    // are keyed by whichever labels the trainer used.
-    val positions = knPositions(corpus, textCol, hashKeys)
+  def trainKneserNeyModel(corpus: DataFrame, textCol: String = "text"): KnModel = {
+    // positions frame, one row per token: (w1, w2 = the next token's key
+    // or null). Hash keys are a pure relabeling — every count equals the
+    // string-keyed count absent a 64-bit FNV collision — and every
+    // shuffle carries 8-byte keys instead of token strings.
+    val positions = knPositions(corpus, textCol)
     val bi = graft.core.Ckpt.pin(
       positions.filter(col("w2").isNotNull)
         .groupBy("w1", "w2").agg(count(lit(1)).as("c12")))
@@ -680,33 +525,21 @@ object TextStats {
 
   /** Adjacent-token bigram position stream shared by the Kneser-Ney
     * trainer and scorer: one row per token with (w1, w2 = successor or
-    * null at the doc tail), plus the passed-through key columns. String
-    * path: posexplode + per-doc window lead. hashKeys path: per-token
-    * 64-bit hashes ([[graft.expr.TokenGramHashes]], k = 1 — one hash per
-    * token INCLUDING empty tokens, preserving the split convention)
-    * zipped against their own shifted slice, no window shuffle. */
+    * null at the doc tail), plus the passed-through key columns. Keys
+    * are per-token 64-bit hashes ([[graft.expr.TokenGramHashes]], k = 1 —
+    * one hash per token INCLUDING empty tokens, preserving the split
+    * convention) zipped against their own 1-shifted slice: arrays_zip
+    * pads the shorter slice with null exactly at the doc tail, so no
+    * per-doc window shuffle is needed. */
   private def knPositions(src: DataFrame, textCol: String,
-      hashKeys: Boolean, keyCols: Seq[String] = Seq.empty): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+      keyCols: Seq[String] = Seq.empty): DataFrame = {
     val keys = keyCols.map(col)
-    if (hashKeys)
-      src.select(keys :+ graft.expr.TokenGramHashes.tokenGramHashes(
-          Dedup.tokens(col(textCol)), 1).as("__hs"): _*)
-        .withColumn("__nx",
-          slice(col("__hs"), lit(2), greatest(size(col("__hs")) - 1, lit(0))))
-        .select(keys :+ explode(arrays_zip(col("__hs"), col("__nx"))).as("__z"): _*)
-        .select(keys :+ col("__z.__hs").as("w1") :+ col("__z.__nx").as("w2"): _*)
-    else {
-      val grain =
-        if (keyCols.nonEmpty) keys
-        else Seq(monotonically_increasing_id().as("__d"))
-      val grainRefs = (if (keyCols.nonEmpty) keyCols else Seq("__d")).map(col)
-      val tok = src.select(grain :+ col(textCol).as("__t"): _*)
-        .select(grainRefs :+ posexplode(Dedup.tokens(col("__t"))).as(Seq("pos", "w")): _*)
-      val w = Window.partitionBy(grainRefs: _*).orderBy("pos")
-      tok.withColumn("w2", lead("w", 1).over(w))
-        .select(keys :+ col("w").as("w1") :+ col("w2"): _*)
-    }
+    src.select(keys :+ graft.expr.TokenGramHashes.tokenGramHashes(
+        Dedup.tokens(col(textCol)), 1).as("__hs"): _*)
+      .withColumn("__nx",
+        slice(col("__hs"), lit(2), greatest(size(col("__hs")) - 1, lit(0))))
+      .select(keys :+ explode(arrays_zip(col("__hs"), col("__nx"))).as("__z"): _*)
+      .select(keys :+ col("__z.__hs").as("w1") :+ col("__z.__nx").as("w2"): _*)
   }
 
   /** Per-doc mean log-likelihood under interpolated Kneser–Ney:
@@ -726,15 +559,12 @@ object TextStats {
     * join shape as [[bigramLogLikelihood]]: doc bigrams LEFT-join the
     * three model frames on their gram keys. */
   def kneserNeyLogLikelihood(docs: DataFrame, model: KnModel,
-      idCol: String = "doc_id", textCol: String = "text",
-      hashKeys: Boolean = false): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val dCol = lit(model.discount)
     val bCol = lit(model.bigramTypes.toDouble)
     val floorP = lit(1.0 / (model.vocab + 1.0))
-    // hashKeys must match the trainer's: the model frames are keyed by
-    // whichever labels (strings or 64-bit token hashes) the trainer used
     knPositions(docs.select(col(idCol).as("doc_id"), col(textCol)),
-        textCol, hashKeys, keyCols = Seq("doc_id"))
+        textCol, keyCols = Seq("doc_id"))
       .withColumnRenamed("w1", "w")
       .filter(col("w2").isNotNull)
       .join(model.bi.select(col("w1").as("w"), col("w2"), col("c12").as("__c12")),
@@ -766,22 +596,21 @@ object TextStats {
     * 2007) precisely because each frame is one plain count aggregate —
     * one gram-keyed shuffle each, additive across corpus shards — where
     * Kneser–Ney needs global type statistics per order. The natural
-    * 100 TB upgrade of [[KnModel]] when the corpus outgrows smoothing. */
+    * 100 TB upgrade of [[KnModel]] when the corpus outgrows smoothing.
+    * Words are keyed by their 64-bit token hash, as in [[KnModel]]. */
   final case class SbModel(tri: DataFrame, bi: DataFrame, uni: DataFrame,
       total: Long)
 
   /** Train the Stupid Backoff count frames on a reference corpus. One
     * corpus scan builds the (w, w2, w3) position stream (Ckpt-pinned —
-    * three count rollups would each replay the token window otherwise);
+    * three count rollups would each replay the token scan otherwise);
     * unigram, bigram and trigram counts are independent aggregates of
     * it, and the token total is a sum over the unigram frame. */
-  def trainStupidBackoff(corpus: DataFrame, textCol: String = "text",
-      hashKeys: Boolean = false): SbModel = {
-    // (w1, w2, w3) = each token with its two successors (nulls at the doc
-    // tail). hashKeys trades the per-doc window shuffle for zipped slices
-    // of one TokenGramHashes pass and 8-byte keys through every count
-    // shuffle — the same relabeling contract as the KN trainer above.
-    val seq3 = graft.core.Ckpt.pin(sbPositions(corpus, textCol, hashKeys))
+  def trainStupidBackoff(corpus: DataFrame, textCol: String = "text"): SbModel = {
+    // (w1, w2, w3) = each token's key with its two successors' (nulls at
+    // the doc tail): 8-byte keys through every count shuffle — the same
+    // relabeling contract as the KN trainer above.
+    val seq3 = graft.core.Ckpt.pin(sbPositions(corpus, textCol))
     val uni = graft.core.Ckpt.pin(
       seq3.groupBy("w1").agg(count(lit(1)).as("c1")))
     val bi = graft.core.Ckpt.pin(seq3.filter(col("w2").isNotNull)
@@ -797,32 +626,18 @@ object TextStats {
     * tail), plus passed-through key columns — the 3-order sibling of
     * [[knPositions]]. */
   private def sbPositions(src: DataFrame, textCol: String,
-      hashKeys: Boolean, keyCols: Seq[String] = Seq.empty): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+      keyCols: Seq[String] = Seq.empty): DataFrame = {
     val keys = keyCols.map(col)
-    if (hashKeys)
-      src.select(keys :+ graft.expr.TokenGramHashes.tokenGramHashes(
-          Dedup.tokens(col(textCol)), 1).as("__hs"): _*)
-        .withColumn("__n2",
-          slice(col("__hs"), lit(2), greatest(size(col("__hs")) - 1, lit(0))))
-        .withColumn("__n3",
-          slice(col("__hs"), lit(3), greatest(size(col("__hs")) - 2, lit(0))))
-        .select(keys :+
-          explode(arrays_zip(col("__hs"), col("__n2"), col("__n3"))).as("__z"): _*)
-        .select(keys :+ col("__z.__hs").as("w1") :+ col("__z.__n2").as("w2") :+
-          col("__z.__n3").as("w3"): _*)
-    else {
-      val grain =
-        if (keyCols.nonEmpty) keys
-        else Seq(monotonically_increasing_id().as("__d"))
-      val grainRefs = (if (keyCols.nonEmpty) keyCols else Seq("__d")).map(col)
-      val tok = src.select(grain :+ col(textCol).as("__t"): _*)
-        .select(grainRefs :+ posexplode(Dedup.tokens(col("__t"))).as(Seq("pos", "w")): _*)
-      val w = Window.partitionBy(grainRefs: _*).orderBy("pos")
-      tok.withColumn("w2", lead("w", 1).over(w))
-        .withColumn("w3", lead("w", 2).over(w))
-        .select(keys :+ col("w").as("w1") :+ col("w2") :+ col("w3"): _*)
-    }
+    src.select(keys :+ graft.expr.TokenGramHashes.tokenGramHashes(
+        Dedup.tokens(col(textCol)), 1).as("__hs"): _*)
+      .withColumn("__n2",
+        slice(col("__hs"), lit(2), greatest(size(col("__hs")) - 1, lit(0))))
+      .withColumn("__n3",
+        slice(col("__hs"), lit(3), greatest(size(col("__hs")) - 2, lit(0))))
+      .select(keys :+
+        explode(arrays_zip(col("__hs"), col("__n2"), col("__n3"))).as("__z"): _*)
+      .select(keys :+ col("__z.__hs").as("w1") :+ col("__z.__n2").as("w2") :+
+        col("__z.__n3").as("w3"): _*)
   }
 
   /** Per-doc mean log Stupid Backoff score over trigram positions:
@@ -846,16 +661,13 @@ object TextStats {
     * its context bigram is in the model, and a seen bigram implies its
     * first word is, so the CASE arms never divide by null. */
   def stupidBackoffScore(docs: DataFrame, model: SbModel, alpha: Double = 0.4,
-      idCol: String = "doc_id", textCol: String = "text",
-      hashKeys: Boolean = false): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(alpha > 0.0 && alpha < 1.0, s"alpha must be in (0,1), got $alpha")
     val a = lit(alpha)
     val a2 = lit(alpha * alpha)
     val n = lit(model.total.toDouble)
-    // hashKeys must match the trainer's — the count frames are keyed by
-    // whichever labels the trainer used
     sbPositions(docs.select(col(idCol).as("doc_id"), col(textCol)),
-        textCol, hashKeys, keyCols = Seq("doc_id"))
+        textCol, keyCols = Seq("doc_id"))
       .filter(col("w3").isNotNull)
       .join(model.tri.select(col("w1"), col("w2"), col("w3"),
         col("c123").as("__c123")), Seq("w1", "w2", "w3"), "left")
@@ -929,8 +741,8 @@ object TextStats {
   // ---- benchmark decontamination -------------------------------------------
 
   /** Token k-gram rows, hashed: the contamination-check gram stream,
-    * built SHUFFLE-FREE. The repetitionStats window-lead shape would
-    * shuffle the exploded token stream by doc_id — a corpus-wide exchange
+    * built SHUFFLE-FREE. A window-lead gram shape would shuffle the
+    * exploded token stream by doc_id — a corpus-wide exchange
     * this operator doesn't otherwise need (unlike minhash, whose groupBy
     * wants that partitioning anyway). The native codegen'd
     * [[graft.expr.TokenGramHashes]] expression builds the sliding 64-bit

@@ -35,15 +35,31 @@ class DedupSpec extends SparkSpec {
     assert(out2(4L) == phrase, s"got ${out2(4L)}")
   }
 
+  /** Plain-Scala sliding-window dedup over string grams: each k-token
+    * gram's first (doc, pos) occurrence wins, every token a losing
+    * window covers is removed, emptied docs disappear. */
+  private def windowDedupRef(rows: Seq[(Long, String)], k: Int): Map[Long, (Long, String)] = {
+    val toks = rows.map { case (id, t) => id -> GramRef.tokens(t) }
+    val starts = for ((id, ts) <- toks; (g, pos) <- GramRef.grams(ts, k).zipWithIndex)
+      yield (GramRef.gramString(g), id, pos)
+    val losers = starts.groupBy(_._1).values
+      .flatMap(_.sortBy(s => (s._2, s._3)).tail.map(s => (s._2, s._3))).toSet
+    toks.flatMap { case (id, ts) =>
+      val kept = ts.indices.filterNot(p => (p - k + 1 to p).exists(s => losers((id, s))))
+      if (kept.isEmpty) None else Some(id -> ((kept.size.toLong, kept.map(ts).mkString(" "))))
+    }.toMap
+  }
+
   test("window dedup: docs shorter than the window survive intact; hashKeys form agrees") {
-    val d = docs((1L, "tiny doc"), (2L, "tiny doc"), (3L, "one two three four five"),
+    val rows = Seq((1L, "tiny doc"), (2L, "tiny doc"), (3L, "one two three four five"),
       (4L, "zz one two three four five tail"))
-    val s1 = Dedup.dropDuplicateWindows(d, windowTokens = 5).orderBy("doc_id").collect().toSeq
+    val out = Dedup.dropDuplicateWindows(docs(rows: _*), windowTokens = 5)
+      .collect().map(r => r.getAs[Long]("doc_id") ->
+        ((r.getAs[Long]("n_tokens_kept"), r.getAs[String]("text")))).toMap
     // both 2-token docs survive whole (no 5-token window exists in them)
-    assert(s1.count(r => r.getAs[String]("text") == "tiny doc") == 2)
-    val s2 = Dedup.dropDuplicateWindows(d, windowTokens = 5, hashKeys = true)
-      .orderBy("doc_id").collect().toSeq
-    assert(s1 == s2, "hash-keyed form diverged from exact-string form")
+    assert(out.values.count(_._2 == "tiny doc") == 2)
+    // the hash-keyed operator agrees with the string-gram reference
+    assert(out == windowDedupRef(rows, 5), s"got $out")
   }
 
   test("span dedup: global first occurrence wins, within-doc repeats dropped") {

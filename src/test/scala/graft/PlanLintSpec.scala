@@ -221,7 +221,7 @@ class PlanLintSpec extends SparkSpec {
     ("q_hll_distinct_lineitem", "pmod(l_partkey, 2147483648L)"),
     ("q_kmv_distinct_lineitem", "pmod(l_partkey, 2147483648L)"),
     // same mixHash-avalanche duplication over the STAGED gram surrogate
-    // `gh` (the expensive rollingHash fold is evaluated once in its own
+    // `gh` (unpacked once from the KarpRabinNGramHashes walk in its own
     // projection; only the O(1) integer mix is triplicated by
     // hllBucketRank's bucket + two rank reads)
     ("q_distinct_ngrams_approx_docs", "pmod(gh, 2147483648L)"),

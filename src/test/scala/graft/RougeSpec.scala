@@ -76,19 +76,33 @@ class RougeSpec extends SparkSpec {
   }
 
   test("rougeN: hashKeys relabeling is row-exact vs the string-gram path") {
-    // the driver ships hashKeys = true; its oracle replays STRING grams,
-    // which is only sound because hashing relabels the count groups
-    // without changing any count — pin that, including repeated grams,
-    // boundary-sensitive tokens, and empty/whitespace sides
-    val p = pairs.union(Seq(
-      (7L, "ab c ab c ab", "ab c x ab"),
-      (8L, "a bc", "ab c")).toDF("pair_id", "candidate", "reference"))
+    // rougeN keys its count groups by 64-bit gram hash while the registry
+    // oracle replays STRING grams — sound only because hashing relabels
+    // the groups without changing any count. Pin row-exact equality with
+    // a plain-Scala string-gram reference, including repeated grams,
+    // boundary-sensitive tokens, and empty/whitespace sides.
+    val extra = Seq((7L, "ab c ab c ab", "ab c x ab"), (8L, "a bc", "ab c"))
+    val p = pairs.union(extra.toDF("pair_id", "candidate", "reference"))
+    val texts = p.collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+    def ref(cand: String, refText: String, n: Int) = {
+      val cc = GramRef.gramCounts(GramRef.liveTokens(cand), n)
+      val rc = GramRef.gramCounts(GramRef.liveTokens(refText), n)
+      val hit = cc.toSeq.map { case (g, k) => math.min(k, rc.getOrElse(g, 0L)) }.sum
+      val (cn, rn) = (cc.values.sum, rc.values.sum)
+      val rr = if (rn > 0) Some(GramRef.r6(hit.toDouble / rn)) else None
+      val pp = if (cn > 0) Some(GramRef.r6(hit.toDouble / cn)) else None
+      val f = for (a <- rr; b <- pp)
+        yield if (a + b > 0) GramRef.r6(2.0 * b * a / (b + a)) else 0.0
+      (cn, rn, hit, rr, pp, f)
+    }
     for (n <- 1 to 3) {
-      val exact = Rouge.rougeN(p, n = n).orderBy("pair_id")
-        .collect().map(_.toString).toSeq
-      val hashed = Rouge.rougeN(p, n = n, hashKeys = true).orderBy("pair_id")
-        .collect().map(_.toString).toSeq
-      assert(exact == hashed, s"n=$n: hashKeys changed rougeN output")
+      val got = Rouge.rougeN(p, n = n).collect().map { r =>
+        def d(c: String) = Option(r.getAs[java.lang.Double](c)).map(_.doubleValue)
+        r.getAs[Long]("pair_id") -> ((r.getAs[Long]("c_ngrams"), r.getAs[Long]("r_ngrams"),
+          r.getAs[Long]("hit"), d("rouge_r"), d("rouge_p"), d("rouge_f")))
+      }.toMap
+      val want = texts.map { case (id, c, r) => id -> ref(c, r, n) }.toMap
+      assert(got == want, s"n=$n: rougeN vs string-gram reference:\n$got\n$want")
     }
   }
 

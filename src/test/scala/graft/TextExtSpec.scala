@@ -328,14 +328,16 @@ class TextExtSpec extends SparkSpec {
     // bigram types (a,b)x2 (b,a)x2 (a,c)x1 -> B=3, n1=1, n2=2, D=1/5
     assert(m.bigramTypes == 3L && m.vocab == 3L)
     assert(math.abs(m.discount - 0.2) < 1e-15, s"D=${m.discount}")
-    val ctx = m.ctx.collect().map(r => r.getString(0) ->
+    // model frames name words by their 64-bit token key
+    import GramRef.key
+    val ctx = m.ctx.collect().map(r => r.getLong(0) ->
       ((r.getLong(1), r.getLong(2)))).toMap
-    assert(ctx == Map("a" -> ((3L, 2L)), "b" -> ((2L, 1L))), s"$ctx")
-    val cont = m.cont.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(cont == Map("a" -> 1L, "b" -> 1L, "c" -> 1L), s"$cont")
+    assert(ctx == Map(key("a") -> ((3L, 2L)), key("b") -> ((2L, 1L))), s"$ctx")
+    val cont = m.cont.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(cont == Map(key("a") -> 1L, key("b") -> 1L, key("c") -> 1L), s"$cont")
     // local mirror of p(w2|w1) over the collected model
-    val bi = m.bi.collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    def p(w1: String, w2: String): Double = {
+    val bi = m.bi.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    def p(w1: Long, w2: Long): Double = {
       val pc = cont.get(w2).map(_.toDouble / m.bigramTypes)
         .getOrElse(1.0 / (m.vocab + 1.0))
       ctx.get(w1) match {
@@ -379,11 +381,14 @@ class TextExtSpec extends SparkSpec {
     val ref = Seq((1L, "a b c a b d")).toDF("doc_id", "text")
     val m = TextStats.trainStupidBackoff(ref)
     assert(m.total == 6L, s"N=${m.total}")
-    val uni = m.uni.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(uni == Map("a" -> 2L, "b" -> 2L, "c" -> 1L, "d" -> 1L), s"$uni")
+    // count frames name words by their 64-bit token key
+    import GramRef.key
+    val uni = m.uni.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(uni == Map(key("a") -> 2L, key("b") -> 2L, key("c") -> 1L, key("d") -> 1L), s"$uni")
     val tri = m.tri.collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2)) -> r.getLong(3)).toMap
-    assert(tri.size == 4 && tri(("a", "b", "c")) == 1L && tri(("a", "b", "d")) == 1L)
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) -> r.getLong(3)).toMap
+    assert(tri.size == 4 && tri((key("a"), key("b"), key("c"))) == 1L &&
+      tri((key("a"), key("b"), key("d"))) == 1L)
     val scored = TextStats.stupidBackoffScore(
       Seq((10L, "a b c"),   // seen trigram: c123/c12 = 1/2
           (11L, "b b c"),   // unseen trigram, seen (b,c): 0.4 * 1/2
@@ -408,37 +413,73 @@ class TextExtSpec extends SparkSpec {
 
   test("KN + SB hashKeys: hash-relabeled path row-identical to string keys") {
     // the r14 bleu2/rouge2 relabeling contract extended to the LM family:
-    // hashed gram keys may only RELABEL the join/count groups — every
-    // score and count must come out row-identical. Corpus exercises the
-    // null/empty-text discipline, single-token docs, repeated bigrams,
-    // and OOV / unseen-context scoring branches.
-    val ref = Seq(
+    // the models key words by 64-bit token hash, which may only RELABEL
+    // the join/count groups. A plain-Scala reference trains and scores
+    // on the token STRINGS, in the operators' arithmetic order
+    // (StrictMath.log is Spark's log); every model scalar, count-frame
+    // cardinality and per-doc row must match exactly. Corpus exercises
+    // the null/empty-text discipline, single-token docs, repeated
+    // bigrams, and OOV / unseen-context scoring branches.
+    val refRows = Seq(
       (0L, "the cat sat on the mat"), (2L, "the cat ran on the mat"),
       (4L, "a b a b a c"), (6L, ""), (8L, null.asInstanceOf[String]),
-      (10L, "solo"), (12L, "b a the cat c")).toDF("doc_id", "text")
-    val docs = Seq(
+      (10L, "solo"), (12L, "b a the cat c"))
+    val docRows = Seq(
       (1L, "the cat sat"), (3L, "purple elephants fly quickly"),
       (5L, "a b x"), (7L, "z z z"), (9L, ""), (11L, "two words"),
-      (13L, null.asInstanceOf[String])).toDF("doc_id", "text")
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.orderBy("doc_id").collect().map(_.toString).toSeq
-    val mS = TextStats.trainKneserNeyModel(ref)
-    val mH = TextStats.trainKneserNeyModel(ref, hashKeys = true)
-    assert(mH.bigramTypes == mS.bigramTypes && mH.vocab == mS.vocab &&
-      mH.discount == mS.discount,
-      s"KN scalars: (${mH.bigramTypes},${mH.vocab},${mH.discount}) vs " +
-        s"(${mS.bigramTypes},${mS.vocab},${mS.discount})")
-    assert(rows(TextStats.kneserNeyLogLikelihood(docs, mH, hashKeys = true)) ==
-      rows(TextStats.kneserNeyLogLikelihood(docs, mS)),
-      "KN per-doc scores differ between hash and string keys")
-    val sS = TextStats.trainStupidBackoff(ref)
-    val sH = TextStats.trainStupidBackoff(ref, hashKeys = true)
-    assert(sH.total == sS.total, s"SB total ${sH.total} vs ${sS.total}")
-    assert(sH.tri.count() == sS.tri.count() && sH.bi.count() == sS.bi.count() &&
-      sH.uni.count() == sS.uni.count(), "SB count-frame cardinalities differ")
-    assert(rows(TextStats.stupidBackoffScore(docs, sH, hashKeys = true)) ==
-      rows(TextStats.stupidBackoffScore(docs, sS)),
-      "SB per-doc scores differ between hash and string keys")
+      (13L, null.asInstanceOf[String]))
+    val ref = refRows.toDF("doc_id", "text")
+    val docs = docRows.toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double, Long)] =
+      df.orderBy("doc_id").collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
+    def counts[K](ks: Seq[K]): Map[K, Long] =
+      ks.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
+    def meanRows(scored: Seq[(Long, Seq[Double])]): Seq[(Long, Double, Long)] =
+      scored.filter(_._2.nonEmpty).sortBy(_._1)
+        .map { case (id, lps) => (id, lps.sum / lps.size, lps.size.toLong) }
+    val refToks = refRows.map(_._2).filter(_ != null).map(GramRef.tokens)
+    val docToks = docRows.filter(_._2 != null).map { case (id, t) => id -> GramRef.tokens(t) }
+    val uni = counts(refToks.flatten)
+    val bi = counts(refToks.flatMap(GramRef.grams(_, 2)))
+    val tri = counts(refToks.flatMap(GramRef.grams(_, 3)))
+
+    // Kneser-Ney over string keys
+    val ctx = bi.toSeq.groupBy(_._1.head).map { case (w1, g) => w1 -> ((g.map(_._2).sum, g.size)) }
+    val cont = bi.keys.toSeq.groupBy(_(1)).map { case (w2, g) => w2 -> g.size }
+    val (n1, n2) = (bi.values.count(_ == 1L), bi.values.count(_ == 2L))
+    val d = if (n1 + 2 * n2 > 0) n1.toDouble / (n1 + 2.0 * n2) else 0.75
+    val m = TextStats.trainKneserNeyModel(ref)
+    assert((m.bigramTypes, m.vocab, m.discount) == ((bi.size.toLong, uni.size.toLong, d)),
+      s"KN scalars: (${m.bigramTypes},${m.vocab},${m.discount}) vs (${bi.size},${uni.size},$d)")
+    def knLp(g: Seq[String]): Double = {
+      val pcont = cont.get(g(1)).map(_.toDouble / m.bigramTypes.toDouble)
+        .getOrElse(1.0 / (m.vocab + 1.0))
+      StrictMath.log(ctx.get(g.head) match {
+        case Some((c1, n1fwd)) =>
+          math.max(bi.getOrElse(g, 0L).toDouble - d, 0.0) / c1.toDouble +
+            d * n1fwd.toDouble / c1.toDouble * pcont
+        case None => pcont
+      })
+    }
+    assert(rows(TextStats.kneserNeyLogLikelihood(docs, m)) ==
+      meanRows(docToks.map { case (id, ts) => id -> GramRef.grams(ts, 2).map(knLp) }),
+      "KN per-doc scores differ from the string-key reference")
+
+    // Stupid Backoff over string keys
+    val sb = TextStats.trainStupidBackoff(ref)
+    val total = uni.values.sum
+    assert(sb.total == total, s"SB total ${sb.total} vs $total")
+    assert((sb.tri.count(), sb.bi.count(), sb.uni.count()) ==
+      ((tri.size.toLong, bi.size.toLong, uni.size.toLong)), "SB count-frame cardinalities differ")
+    val (a, a2, n) = (0.4, 0.4 * 0.4, total.toDouble)
+    def sbLp(g: Seq[String]): Double = StrictMath.log(
+      if (tri.contains(g)) tri(g).toDouble / bi(g.take(2)).toDouble
+      else if (bi.contains(g.drop(1))) a * bi(g.drop(1)).toDouble / uni(g(1)).toDouble
+      else if (uni.contains(g(2))) a2 * uni(g(2)).toDouble / n
+      else a2 / (n + 1.0))
+    assert(rows(TextStats.stupidBackoffScore(docs, sb)) ==
+      meanRows(docToks.map { case (id, ts) => id -> GramRef.grams(ts, 3).map(sbLp) }),
+      "SB per-doc scores differ from the string-key reference")
   }
 
   test("gramDuplicationStats: shared-gram fractions, distinctness, short docs") {
@@ -524,41 +565,28 @@ class TextExtSpec extends SparkSpec {
     val exact = TextStats.distinctNgramRatio(docs).collect()
       .map(r => (r.getAs[String]("group"), r.getAs[Int]("n")) ->
         ((r.getAs[Long]("total_ngrams"), r.getAs[Long]("distinct_ngrams")))).toMap
+    // the Karp–Rabin gram surrogate (what lets q_distinct_ngrams_approx_docs
+    // hard-oracle the sketch) must be a sound HLL input: exact totals,
+    // occupancy within the register count, the error envelope
     val approx = TextStats.distinctNgramRatioApprox(docs, b = 12).collect()
       .map(r => (r.getAs[String]("group"), r.getAs[Int]("n")) ->
-        ((r.getAs[Long]("total_ngrams"), r.getAs[Double]("est_distinct"),
-          r.getAs[Double]("est_ratio")))).toMap
+        ((r.getAs[Long]("total_ngrams"), r.getAs[Long]("n_registers"),
+          r.getAs[Double]("est_distinct"), r.getAs[Double]("est_ratio")))).toMap
     assert(approx.keySet == exact.keySet)
-    approx.foreach { case (k, (total, est, ratio)) =>
+    approx.foreach { case (k, (total, nreg, est, ratio)) =>
       val (exTotal, exDistinct) = exact(k)
       assert(total == exTotal, s"$k: total $total != exact $exTotal")
+      assert(nreg >= 1L && nreg <= 4096L)
       val rel = math.abs(est - exDistinct) / exDistinct.toDouble
       assert(rel <= 0.05, s"$k: est $est vs exact $exDistinct (rel $rel)")
       assert(math.abs(ratio - est / total) < 1e-12)
     }
-    // the gramHash injection seam (what q_distinct_ngrams_approx_docs
-    // feeds the oracle through): the rollingHash draw must be a sound
-    // HLL input too — same exact totals, same error envelope
-    val inj = TextStats.distinctNgramRatioApprox(docs, b = 12,
-        gramHash = TextStats.rollingHash(_)).collect()
-      .map(r => (r.getAs[String]("group"), r.getAs[Int]("n")) ->
-        ((r.getAs[Long]("total_ngrams"), r.getAs[Long]("n_registers"),
-          r.getAs[Double]("est_distinct")))).toMap
-    assert(inj.keySet == exact.keySet)
-    inj.foreach { case (k, (total, nreg, est)) =>
-      val (exTotal, exDistinct) = exact(k)
-      assert(total == exTotal, s"$k: injected total $total != exact $exTotal")
-      assert(nreg >= 1L && nreg <= 4096L)
-      val rel = math.abs(est - exDistinct) / exDistinct.toDouble
-      assert(rel <= 0.05, s"$k: injected est $est vs exact $exDistinct (rel $rel)")
-    }
   }
 
-  test("distinctNgramRatioApproxKR: fused path ≡ window path, registers and all") {
-    // the q_distinct_ngrams_approx_docs rewrite: ONE KarpRabinNGramHashes
-    // walk must reproduce the posexplode → lead-window → concat_ws →
-    // rollingHash gram stream exactly — same (n, gh) multiset ⇒ same
-    // buckets, ranks, register maxima, totals and estimator branches
+  /** The distinct-n fixture: the sf0.001 corpus plus edge docs — repeats,
+    * a 1-token doc, irregular spacing, unicode, null and empty text —
+    * and its collected (lang, text) rows. */
+  private def distinctNgramFixture(): (org.apache.spark.sql.DataFrame, Seq[(String, String)]) = {
     val fixture = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "lang", "text")
     val extra = Seq(
@@ -571,44 +599,64 @@ class TextExtSpec extends SparkSpec {
       (900007L, "yy", "two tokens")
     ).toDF("doc_id", "lang", "text")
     val docs = fixture.union(extra)
-    def snap(df: org.apache.spark.sql.DataFrame) = df.collect()
+    (docs, docs.collect().map(r => (r.getString(1), r.getString(2))).toSeq)
+  }
+
+  /** Plain-Scala (group, n) → gram strings of the distinct-n operators:
+    * non-empty tokens, n = 1..3. */
+  private def ngramsByGroup(texts: Seq[(String, String)]): Map[(String, Int), Seq[String]] =
+    (for ((g, t) <- texts; n <- 1 to 3; gram <- GramRef.grams(GramRef.liveTokens(t), n))
+      yield (g, n) -> GramRef.gramString(gram))
+      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+
+  test("distinctNgramRatioApprox: sketch equals a plain-Scala Karp–Rabin HLL reference") {
+    // ONE KarpRabinNGramHashes walk must reproduce the KR hash of every
+    // space-joined gram string — same (n, gh) multiset ⇒ same buckets,
+    // ranks, register maxima, totals and estimator branches
+    val (docs, texts) = distinctNgramFixture()
+    val (b, m) = (12, 4096)
+    val wb = 32 - b
+    val ref = ngramsByGroup(texts).map { case (k, grams) =>
+      val regs = grams.map { g =>
+        val h = graft.ext.Sketches.mixHashLocal(GramRef.karpRabin(g))
+        val w = h & ((1L << wb) - 1)
+        (h >> wb) -> (if (w == 0) wb + 1 else wb + 1 - (64 - java.lang.Long.numberOfLeadingZeros(w)))
+      }.groupBy(_._1).values.map(_.map(_._2).max).toSeq
+      val nreg = regs.size.toLong
+      val v = (m - nreg).toDouble
+      val raw = 0.7213 / (1.0 + 1.079 / m) * m * m / (regs.map(r => math.pow(2.0, -r)).sum + v)
+      val est = if (raw <= 2.5 * m && v > 0) m * math.log(m / v) else raw
+      k -> ((grams.size.toLong, nreg, est, est / grams.size))
+    }
+    val got = TextStats.distinctNgramRatioApprox(docs, b = b).collect()
       .map(r => (r.getAs[String]("group"), r.getAs[Int]("n")) ->
         ((r.getAs[Long]("total_ngrams"), r.getAs[Long]("n_registers"),
           r.getAs[Double]("est_distinct"), r.getAs[Double]("est_ratio")))).toMap
-    val win = snap(TextStats.distinctNgramRatioApprox(docs, b = 12,
-      gramHash = TextStats.rollingHash(_)))
-    val kr = snap(TextStats.distinctNgramRatioApproxKR(docs, b = 12))
-    assert(kr.keySet == win.keySet)
-    kr.foreach { case (k, (total, nreg, est, ratio)) =>
-      val (wTotal, wNreg, wEst, wRatio) = win(k)
-      assert(total == wTotal && nreg == wNreg, s"$k: longs diverge")
+    assert(got.keySet == ref.keySet)
+    got.foreach { case (k, (total, nreg, est, ratio)) =>
+      val (rTotal, rNreg, rEst, rRatio) = ref(k)
+      assert(total == rTotal && nreg == rNreg, s"$k: longs diverge")
       // identical register sets; only the FP register-sum ORDER may differ
-      // between plans (≤4096 terms ⇒ relative spread < 4096·2⁻⁵³ ≈ 5e-13)
-      assert(math.abs(est - wEst) <= 1e-9 * math.abs(wEst), s"$k: est $est vs $wEst")
-      assert(math.abs(ratio - wRatio) <= 1e-9 * math.abs(wRatio), s"$k: ratio")
+      // (≤4096 terms ⇒ relative spread < 4096·2⁻⁵³ ≈ 5e-13)
+      assert(math.abs(est - rEst) <= 1e-9 * math.abs(rEst), s"$k: est $est vs $rEst")
+      assert(math.abs(ratio - rRatio) <= 1e-9 * math.abs(rRatio), s"$k: ratio")
     }
   }
 
-  test("distinctNgramRatioFused: zero-window path row-exact vs the window path") {
-    // the q_distinct_ngrams_docs rewrite: ONE TokenNGrams walk must
-    // reproduce the posexplode → lead-window → concat_ws gram STRINGS
+  test("distinctNgramRatio: row-exact vs a plain-Scala string-gram reference") {
+    // ONE TokenNGrams walk must reproduce the space-joined gram STRINGS
     // exactly — same (group, n, gram) multiset ⇒ same count longs ⇒
     // bit-identical ratios (long/long division)
-    val fixture = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "lang", "text")
-    val extra = Seq(
-      (910001L, "en", "a b a"),
-      (910002L, "en", "solo"),
-      (910003L, "xx", "  double  spaced   tokens  here  "),
-      (910004L, "xx", "héllo wörld 𝔘ni code"),
-      (910005L, "yy", null: String),
-      (910006L, "yy", ""),
-      (910007L, "yy", "two tokens")
-    ).toDF("doc_id", "lang", "text")
-    val docs = fixture.union(extra)
-    val win = TextStats.distinctNgramRatio(docs).collect().map(_.toString).toSeq
-    val fused = TextStats.distinctNgramRatioFused(docs).collect().map(_.toString).toSeq
-    assert(fused == win, "fused gram path changed distinctNgramRatio output")
+    val (docs, texts) = distinctNgramFixture()
+    val ref = ngramsByGroup(texts).toSeq
+      .map { case ((g, n), grams) =>
+        val d = grams.distinct.size.toLong
+        (g, n, grams.size.toLong, d, d.toDouble / grams.size)
+      }
+      .sortBy(r => (Option(r._1), r._2))
+    val got = TextStats.distinctNgramRatio(docs).collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3), r.getDouble(4))).toSeq
+    assert(got == ref, "distinctNgramRatio vs string-gram reference")
   }
 
   test("bigram LM + collocations: TokenPairs pair stream ≡ the lead-window shape") {
@@ -654,19 +702,27 @@ class TextExtSpec extends SparkSpec {
   }
 
   test("repetitionStats: hashKeys zero-shuffle form is row-exact vs the string path") {
-    // fixture corpus + adversarial shapes: repeated grams (max-run fold),
-    // boundary-sensitive tokens, 1-token and whitespace docs
+    // the operator reads per-doc gram-HASH arrays; a plain-Scala
+    // reference over the token STRINGS (empty tokens kept) must give
+    // identical rows. Fixture corpus + adversarial shapes: repeated grams
+    // (max-run fold), boundary-sensitive tokens, 1-token and whitespace docs
     val fixture = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
     val extra = Seq((100001L, "foo bar foo bar foo"), (100002L, "x x x x x x"),
       (100003L, "solo"), (100004L, "   "), (100005L, "ab c ab c ab"))
       .toDF("doc_id", "text")
     val docs = fixture.union(extra)
-    val a = TextStats.repetitionStats(docs).orderBy("doc_id")
-      .collect().map(_.toString).toSeq
-    val b = TextStats.repetitionStats(docs, hashKeys = true).orderBy("doc_id")
-      .collect().map(_.toString).toSeq
-    assert(a == b, "hashKeys changed repetitionStats output")
+    val want = docs.collect().map { r =>
+      val toks = GramRef.tokens(r.getString(1))
+      val (tri, bi) = (GramRef.gramCounts(toks, 3), GramRef.gramCounts(toks, 2))
+      val (nTri, nBi) = (tri.values.sum, bi.values.sum)
+      val dup = if (nTri == 0) 0.0 else (nTri - tri.size).toDouble / nTri
+      val top = if (nBi == 0) 0.0 else bi.values.max.toDouble / nBi
+      (r.getLong(0), toks.size, dup, top)
+    }.sortBy(_._1).toSeq
+    val got = TextStats.repetitionStats(docs).orderBy("doc_id").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2), r.getDouble(3))).toSeq
+    assert(got == want, "repetitionStats vs string-gram reference")
   }
 
   test("repetitionStats: hand-computed fractions, short-doc zeros") {

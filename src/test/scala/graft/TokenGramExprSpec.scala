@@ -7,29 +7,23 @@ class TokenGramExprSpec extends SparkSpec {
   import spark.implicits._
 
   /** Reference implementation of the kernel, independent of Catalyst. */
-  private def ref(toks: Seq[String], k: Int): Seq[Long] = {
-    if (toks.length < k) Seq.empty
-    else (0 to toks.length - k).map { i =>
-      var h = 0xcbf29ce484222325L
-      for (j <- 0 until k; b <- toks(i + j).getBytes("UTF-8")) {
-        h ^= (b & 0xff).toLong; h *= 0x100000001b3L
-      }
-      // separator per token
-      var h2 = 0xcbf29ce484222325L
-      for (j <- 0 until k) {
-        for (b <- toks(i + j).getBytes("UTF-8")) { h2 ^= (b & 0xff).toLong; h2 *= 0x100000001b3L }
-        h2 ^= 0x1fL; h2 *= 0x100000001b3L
-      }
-      h2
-    }
-  }
+  private def ref(toks: Seq[String], k: Int): Seq[Long] = GramRef.gramKeys(toks, k)
 
   test("expression equals the reference kernel, codegen and interpreted") {
+    // empty tokens (a whitespace-only doc tokenizes to [""], which the
+    // KN/SB/repetitionStats keys hash at k = 1) and null elements (zero
+    // bytes plus the separator, like an empty token) ride in the mix
     val rng = new scala.util.Random(7)
     val rows = (0 until 60).map { i =>
       val n = rng.nextInt(12)
-      (i.toLong, (0 until n).map(_ => rng.alphanumeric.take(1 + rng.nextInt(6)).mkString))
-    }
+      (i.toLong, (0 until n).map { _ =>
+        rng.nextInt(8) match {
+          case 0 => ""
+          case 1 => null
+          case _ => rng.alphanumeric.take(1 + rng.nextInt(6)).mkString
+        }
+      })
+    } ++ Seq((60L, Seq("")), (61L, Seq[String](null)), (62L, Seq("", null, "a", "")))
     val df = rows.toDF("id", "toks")
     for (k <- Seq(1, 3, 5)) {
       val got = df.select($"id", tokenGramHashes($"toks", k).as("h"))
