@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.expr.{CosineSimilarity, DotProduct, TokenGramHashes}
+import graft.expr.{CosineSimilarity, DotProduct, GramPayload, GramWalk}
 
 /** SparkSessionExtensions hook: registers the engine's native functions
   * for SQL use. Attach with
@@ -40,7 +40,7 @@ object GraftExtensions {
       }),
     (
       new FunctionIdentifier("token_gram_hashes"),
-      new ExpressionInfo(classOf[TokenGramHashes].getName, "token_gram_hashes"),
+      new ExpressionInfo(classOf[GramWalk].getName, "token_gram_hashes"),
       (args: Seq[Expression]) => {
         require(args.length == 2,
           "token_gram_hashes(tokens, k) takes an array<string> and a literal int")
@@ -49,7 +49,7 @@ object GraftExtensions {
           case other => throw new IllegalArgumentException(
             s"token_gram_hashes k must be a literal int, got $other")
         }
-        TokenGramHashes(args.head, k)
+        GramWalk(args.head, GramPayload.Fnv64(k))
       }))
 
   /** Attach the function set to an ALREADY-BUILT session (idempotent) —

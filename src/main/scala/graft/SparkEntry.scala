@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Ckpt, Panel, Tables}
+import graft.expr.{GramPayload, GramWalk}
 import graft.ext.{Dedup, Multimodal, Sampling, Similarity, Skew, TextStats}
 import graft.ops._
 import graft.streaming.StreamOps
@@ -1647,7 +1648,7 @@ object SparkEntry {
 
   /** PROMOTED to a hard oracle in round 12 (the q_neardup_stream_docs
     * signature-injection recipe): the PRODUCTION bulk minhash pipeline —
-    * posexplode token stream, lead-window k-token shingle combine,
+    * token-hash array, `Tuple(k)` gram-walk k-token shingle combine,
     * short-doc digest, valid-start filter, lshCore banding + bucket
     * equijoin + exact-Jaccard verify — with Karp–Rabin / polynomial
     * arithmetic injected through [[graft.ext.Dedup
@@ -4192,29 +4193,25 @@ object SparkEntry {
     * accuracy exhibit. */
   private def vocabResemblanceDocs(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    // shingle keys built the DSIR way: hash each TOKEN once (KR), combine
-    // 3 consecutive token hashes arithmetically via window leads — the
-    // string-shingle form (explode(Dedup.shingles) + KR over the joined
-    // string) re-evaluates the derived token array per element (the
-    // documented quadratic transform-lambda trap) and re-folds every
-    // character 3×; this form measured 3.05 → 1.7-2.2 s (BenchOne). Docs
-    // shorter than 3 tokens contribute one whole-doc combined key.
+    // shingle keys built the DSIR way: hash each TOKEN once (KR) into the
+    // doc row's token-hash array, then combine 3 consecutive token hashes
+    // arithmetically from one Tuple(3) gram walk — the string-shingle
+    // form (explode(Dedup.shingles) + KR over the joined string) re-folds
+    // every character 3×; the token-hash form measured 3.05 → 1.7-2.2 s
+    // (BenchOne). Docs shorter than 3 tokens contribute one whole-doc
+    // combined key. Each row is its own token stream.
     def vocab(rem: Int): DataFrame = {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("doc_id").orderBy("pos")
-      val wd = Window.partitionBy("doc_id")
       def comb(a: Column, b: Column) = pmod(a * lit(1000003L) + b, lit(1000000007L))
+      val (th, t2, t3) = (col("t")(0), col("t")(1), col("t")(2))
       docs.filter(col("doc_id") % 2 === rem)
-        .select(col("doc_id"), posexplode(Dedup.tokens(col("text"))).as(Seq("pos", "tok")))
-        .withColumn("th", TextStats.rollingHash(col("tok")))
-        .withColumn("n", count(lit(1)).over(wd))
-        .withColumn("t2", lead("th", 1).over(w))
-        .withColumn("t3", lead("th", 2).over(w))
+        .select(transform(Dedup.tokens(col("text")), TextStats.rollingHash(_)).as("hs"))
+        .select(size(col("hs")).as("n"),
+          posexplode(GramWalk.grams(col("hs"), GramPayload.Tuple(3))).as(Seq("pos", "t")))
         .filter((col("n") >= 3 && col("pos") <= col("n") - 3) ||
           (col("n") < 3 && col("pos") === 0))
-        .select(when(col("n") >= 3, comb(comb(col("th"), col("t2")), col("t3")))
-          .when(col("n") === 2, comb(col("th"), col("t2")))
-          .otherwise(col("th")).as("key"))
+        .select(when(col("n") >= 3, comb(comb(th, t2), t3))
+          .when(col("n") === 2, comb(th, t2))
+          .otherwise(th).as("key"))
     }
     // the DISTINCT-key flags frame is the thing to pin: it has two
     // consumers (bottom-k estimate + exact-Jaccard exhibit) and is
@@ -6510,15 +6507,16 @@ object SparkEntry {
     * corpus — the oracle must agree on absent words too.) */
   /** Phrase-blocklist pass ([[graft.ext.TextStats.phraseBlocklistHits]],
     * the multi-word half of the C4 badwords rule) over the full
-    * documents table with mixed 1- and 2-token entries. The oracle
-    * replays the normalized token stream, BOTH gram lengths (the
-    * 2-gram via a lead window, empty-normalized tokens breaking
+    * documents table with mixed 1- and 2-token entries; Spark builds
+    * both gram lengths from one `Tuple(2)` gram walk per doc row. The
+    * oracle replays the normalized token stream, BOTH gram lengths (the
+    * 2-gram via a DuckDB lead window, empty-normalized tokens breaking
     * adjacency), the IN-list match, and the per-doc occurrence
     * count. */
   private def phraseBlocklistDocs(s: SparkSession, dir: String): DataFrame =
     // Pin before the orderBy (the cdc_chunks pattern): no exchange between
     // the fan-out and the range sort — its sampling pass re-ran the
-    // tokenize + lead window + semi-join + per-doc aggregate (ProbeStages:
+    // tokenize + gram build + semi-join + per-doc aggregate (ProbeStages:
     // a 175 ms sampling twin of the 290 ms real pass). One row per doc.
     core.Ckpt.pin(
       ext.TextStats.phraseBlocklistHits(fanOut(Tables.documents(s, dir), s), "doc_id", "text",

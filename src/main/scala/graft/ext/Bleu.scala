@@ -2,6 +2,8 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.expr.GramWalk
+import graft.expr.GramPayload.Fnv64
 
 /** Sentence-level BLEU-2 between paired texts (Papineni et al. 2002):
   * modified (clipped) unigram and bigram precisions with the brevity
@@ -18,7 +20,7 @@ import org.apache.spark.sql.functions._
   * Fixed at n ≤ 2 by design. Tokenization is the repo-wide whitespace
   * convention with empty tokens dropped (a whitespace-only side has
   * length 0). Gram keys are 64-bit hashes from native
-  * [[graft.expr.TokenGramHashes]] passes over each side's token array —
+  * [[graft.expr.GramWalk]] `Fnv64` passes over each side's token array —
   * no (pair, pos) sort, no gram strings. Hashing only relabels the clip
   * groups, so every hit/total (hence p1/p2/bp/bleu) equals the
   * string-gram value absent a 64-bit collision; BleuSpec checks it
@@ -66,7 +68,7 @@ object Bleu {
     // over the pinned leaf, so all four passes land in one map stage
     def occ(tokCol: String, k: Int, cand: Boolean): DataFrame = tk
       .select(col(idCol), lit(k).as("n"),
-        explode(graft.expr.TokenGramHashes.tokenGramHashes(col(tokCol), k)).as("g"),
+        explode(GramWalk.grams(col(tokCol), Fnv64(k))).as("g"),
         lit(if (cand) 1L else 0L).as("c"), lit(if (cand) 0L else 1L).as("r"))
     val counts = occ("__ctoks", 1, cand = true)
       .unionAll(occ("__ctoks", 2, cand = true))

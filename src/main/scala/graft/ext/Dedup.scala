@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import graft.expr.GramWalk
+import graft.expr.GramPayload.{Fnv64, Joined, Tuple}
 
 /** Deduplication operators for large text corpora (SURVEY §7.4 /
   * BASELINE.json north-star): exact, MinHash+LSH, SimHash, n-gram Jaccard,
@@ -144,7 +146,7 @@ object Dedup {
     * per-doc range-window coverage union, both corpus-parallel.
     *
     * Plan shape: the gram keys come from ONE pass of the native
-    * [[graft.expr.TokenGramHashes]] expression over each doc's token
+    * [[graft.expr.GramWalk]] `Fnv64` payload over each doc's token
     * array — no lead window, no gram STRING ever built, posexplode yields
     * (pos, key) directly, so the gram side needs no (doc, pos) sort
     * exchange at all. (This is NOT the r9 "array-of-shingles" Catalyst
@@ -179,8 +181,7 @@ object Dedup {
       posexplode(tokens(col(textCol))).as(Seq("pos", "w")))
     val grams = docs.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("__toks"))
       .select(col("doc_id"),
-        posexplode(graft.expr.TokenGramHashes.tokenGramHashes(col("__toks"), k))
-          .as(Seq("pos", "key")))
+        posexplode(GramWalk.grams(col("__toks"), Fnv64(k))).as(Seq("pos", "key")))
     val losers = grams
       .withColumn("rn",
         row_number().over(Window.partitionBy("key").orderBy("doc_id", "pos")))
@@ -269,68 +270,57 @@ object Dedup {
   /** Lower-cased whitespace tokens. */
   def tokens(text: Column): Column = split(lower(trim(text)), "\\s+")
 
-  /** k-word shingles of a token array (higher-order functions — codegen,
-    * no UDF). Built by zipping k top-level-bound shifted copies of the
-    * token array, NOT by a transform lambda that slices the derived
-    * array per element — that form re-evaluates the tokenizing split
-    * once per output shingle (the documented quadratic lambda trap;
-    * measured 1.7 s for 130k shingles before the rewrite). concat_ws
-    * skips the nulls zip_with pads the short side with; those partial
-    * tail entries are cut by the final slice. */
+  /** k-word shingles of a text: every k consecutive tokens joined by one
+    * space, from one [[graft.expr.GramWalk]] `Joined(k, k)` over the token
+    * array; a doc shorter than k tokens is one whole-doc shingle. */
   def shingles(text: Column, k: Int): Column = {
     val toks = tokens(text)
-    val joined = (1 until k).foldLeft(toks) { (acc, j) =>
-      zip_with(acc, slice(toks, lit(j + 1), size(toks)), (a, b) => concat_ws(" ", a, b))
-    }
-    when(size(toks) >= k, slice(joined, lit(1), size(toks) - lit(k - 1)))
+    when(size(toks) >= k, GramWalk.grams(toks, Joined(k, k)).getField("gram"))
       .otherwise(array(array_join(toks, " ")))
   }
 
-  /** 64-bit k-shingle hashes (Column form): hash of each string shingle.
-    * NOTE: do not build this from nested array lambdas referencing a
-    * derived array — Catalyst inlines the inner array into the outer
-    * lambda and evaluation goes quadratic. The string path is linear; the
-    * bulk pipeline below avoids strings entirely via posexplode + lead. */
+  /** 64-bit k-shingle hashes (Column form): hash of each distinct string
+    * shingle. The bulk pipeline below hashes tokens instead and never
+    * builds a shingle string. */
   def shingleHashes(text: Column, k: Int): Column =
     transform(array_distinct(shingles(text, k)), s => xxhash64(s))
 
   // ---- MinHash + LSH -------------------------------------------------------
 
-  /** One row per (doc, shingle-hash): posexplode the token stream, hash
-    * each token once, and combine k consecutive token-hashes with a window
-    * `lead` — linear work, and the (doc_id) window shuffle is the SAME
-    * partitioning the signature aggregation needs, so the whole minhash
-    * pipeline costs one exchange. Short docs (< k tokens) contribute one
-    * whole-doc shingle. Duplicate shingles are kept: `min` is multiset-
-    * insensitive, and the verify stage uses collect_set.
+  /** One row per (doc, shingle-hash): hash each token once into the
+    * row's token-hash array, then one [[graft.expr.GramWalk]] `Tuple(k)`
+    * hands every position its k consecutive token hashes for the k-ary
+    * combine — linear work, map-only, no (doc, pos) sort: the signature
+    * aggregate's doc_id exchange is the pipeline's one shuffle. Short
+    * docs (< k tokens) contribute one whole-doc shingle. Duplicate
+    * shingles are kept: `min` is multiset-insensitive, and the verify
+    * stage uses collect_set. Each input row is its own token stream:
+    * rows that share an id are not merged into one stream (their
+    * shingles still meet in the id-keyed aggregates).
     *
     * The token hash and the k-ary combiner are INJECTED (the
     * processNearDedupBatch signature-fn recipe): the defaults are the
     * xxhash64 hot path; [[minhashNearDuplicatesBulkReplayable]] routes
     * Karp–Rabin + polynomial arithmetic through this SAME pipeline so an
-    * SQL oracle can replay the posexplode → lead-combine → short-doc
+    * SQL oracle can replay the token-hash → k-tuple combine → short-doc
     * digest → valid-start filter chain bit-for-bit. */
   private def shingleHashRows(docs: DataFrame, idCol: String, textCol: String, k: Int,
       tokHash: Column => Column = xxhash64(_),
       combine: Seq[Column] => Column = cs => xxhash64(cs: _*)): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    val wdoc = Window.partitionBy("doc_id")
-    val toks = docs.select(col(idCol).as("doc_id"),
-      posexplode(tokens(col(textCol))).as(Seq("pos", "tok")))
-      .withColumn("h0", tokHash(col("tok")))
-      .withColumn("ntok", count(lit(1)).over(wdoc))
-      // whole-doc digest for short docs: min/max/count of token hashes —
-      // deterministic and overflow-free under ANSI (a long sum would throw)
-      .withColumn("hmin", min(col("h0")).over(wdoc))
-      .withColumn("hmax", max(col("h0")).over(wdoc))
-    toks
-      .withColumn("sh",
-        when(col("ntok") >= k, combine((0 until k).map(j => lead(col("h0"), j).over(w))))
-          .otherwise(combine(Seq(col("hmin"), col("hmax"), col("ntok")))))
+    // whole-doc digest for short docs: min/max/count of token hashes —
+    // deterministic and overflow-free under ANSI (a long sum would throw).
+    // ntok stays bigint, the type the combiner always hashed
+    val hs = docs.select(col(idCol).as("doc_id"),
+        transform(tokens(col(textCol)), tokHash).as("hs"))
+      .select(col("doc_id"), col("hs"), size(col("hs")).cast("long").as("ntok"),
+        array_min(col("hs")).as("hmin"), array_max(col("hs")).as("hmax"))
+    hs.select(col("doc_id"), col("ntok"), col("hmin"), col("hmax"),
+        posexplode(GramWalk.grams(col("hs"), Tuple(k))).as(Seq("pos", "t")))
       .filter((col("ntok") >= k && col("pos") <= col("ntok") - k) ||
         (col("ntok") < k && col("pos") === 0))
-      .select("doc_id", "sh")
+      .select(col("doc_id"),
+        when(col("ntok") >= k, combine((0 until k).map(j => col("t")(j))))
+          .otherwise(combine(Seq(col("hmin"), col("hmax"), col("ntok")))).as("sh"))
   }
 
   /** The i-th minhash permutation aggregate: min over xxhash64(shingle, i)
@@ -343,8 +333,8 @@ object Dedup {
 
   /** Per-doc MinHash signature: explode shingles once, derive `numHashes`
     * permutations from a single xxhash64 and take the min of each —
-    * `numHashes` cheap codegen'd min-aggregates, one shuffle (groupBy
-    * reuses the window's doc_id partitioning). */
+    * `numHashes` cheap codegen'd min-aggregates, one shuffle (the
+    * map-side-combined doc_id groupBy). */
   def minhashSignatures(
       docs: DataFrame,
       idCol: String = "doc_id",
@@ -406,7 +396,7 @@ object Dedup {
     * the PRODUCTION bulk pipeline — unlike
     * [[minhashNearDuplicatesReplayable]] (which replays the string-
     * shingle-set variant), this one exercises [[shingleHashRows]] itself:
-    * the posexplode token stream, the lead-window k-token combine, the
+    * the token-hash array, the `Tuple(k)` k-token combine, the
     * short-doc min/max/count digest and the valid-start filter, then the
     * same [[lshCore]]. Karp–Rabin token hashes, a polynomial fold (base
     * 1315423911 mod 1e9+7 — every product < 2^63 because operands stay

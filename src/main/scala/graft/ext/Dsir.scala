@@ -2,6 +2,8 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.expr.GramWalk
+import graft.expr.GramPayload.Tuple
 
 /** DSIR — Data Selection via Importance Resampling (Xie, Santurkar, Ma &
   * Liang, NeurIPS 2023): pick raw-corpus documents whose hashed n-gram
@@ -13,11 +15,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the models are BUCKET tables (`buckets` rows — a model,
   * never data), trained with one gram-keyed partial aggregate per corpus.
-  * Scoring explodes each doc into its 2n−1 gram rows, joins the broadcast
-  * ratio table, and aggregates back per doc — the window that builds
-  * bigrams shuffles on doc_id and the per-doc sum REUSES that exchange
-  * (same key), so scoring costs one corpus shuffle total. Resampling is a
-  * global (rank-exchange) sort-limit on the scored table.
+  * Scoring explodes each doc into its 2n−1 gram rows (a map-only gram
+  * walk — no window, no per-doc sort), joins the broadcast ratio table,
+  * and aggregates back per doc with a map-side-combined doc_id groupBy,
+  * so scoring costs one corpus shuffle total. Resampling is a global
+  * (rank-exchange) sort-limit on the scored table.
   *
   * Determinism: gram hashing is Karp–Rabin modular arithmetic
   * ([[TextStats.rollingHash]]) and the Gumbel noise derives from
@@ -28,34 +30,32 @@ import org.apache.spark.sql.functions._
 object Dsir {
 
   /** Hashed (unigram + bigram) gram-bucket rows: (doc_id, bucket), one
-    * row per gram occurrence. Each token is Karp–Rabin-folded ONCE —
-    * the bigram hash combines the two token hashes arithmetically
-    * ((h1·1000003 + h2) mod p, every intermediate < 2^63) instead of
-    * re-folding the concatenated string, halving the per-character work
-    * (measured 2× on the r8 driver query). The token hash materializes
-    * in the window's child projection, so the lead() window — the one
-    * doc-keyed exchange of the scoring pipeline — carries hashes, not
-    * strings. */
+    * row per gram occurrence. Each token is Karp–Rabin-folded ONCE into
+    * the row's token-hash array, in its own projection — the bigram hash
+    * combines the two token hashes arithmetically ((h1·1000003 + h2)
+    * mod p, every intermediate < 2^63) instead of re-folding the
+    * concatenated string, halving the per-character work (measured 2×
+    * on the r8 driver query). One [[graft.expr.GramWalk]] `Tuple(2)` then
+    * pairs every token hash with its successor (null at the doc tail),
+    * map-only. Each input row is its own token stream: rows that share
+    * an id are not merged into one stream. */
   private[graft] def gramBuckets(
       docs: DataFrame,
       idCol: String,
       textCol: String,
       buckets: Int,
       carryCols: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(buckets >= 2 && buckets <= (1 << 20),
       s"buckets must be in [2, 2^20], got $buckets")
     val carry = carryCols.map(col)
-    val tok = docs.select(col(idCol).as("doc_id") +: carry :+
-        posexplode(Dedup.tokens(col(textCol))).as(Seq("pos", "w")): _*)
-      .select(col("doc_id") +: carry :+ col("pos") :+
-        TextStats.rollingHash(col("w")).as("h1"): _*)
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    tok.withColumn("h2", lead("h1", 1).over(w))
+    val (h1, h2) = (col("t")(0), col("t")(1))
+    docs.select(col(idCol).as("doc_id") +: carry :+
+        transform(Dedup.tokens(col(textCol)), TextStats.rollingHash(_)).as("hs"): _*)
+      .select(col("doc_id") +: carry :+ explode(GramWalk.grams(col("hs"), Tuple(2))).as("t"): _*)
       .select(col("doc_id") +: carry :+ explode(concat(
-        array(col("h1")),
-        when(col("h2").isNotNull,
-          array(pmod(col("h1") * lit(1000003L) + col("h2"), lit(1000000007L))))
+        array(h1),
+        when(h2.isNotNull,
+          array(pmod(h1 * lit(1000003L) + h2, lit(1000000007L))))
           .otherwise(array().cast("array<bigint>")))).as("h"): _*)
       .select(col("doc_id") +: carry :+
         pmod(col("h"), lit(buckets.toLong)).as("bucket"): _*)
@@ -80,7 +80,7 @@ object Dsir {
     // pin the bucket-count tables (≤ buckets rows — models): each has
     // THREE consumers (its total collect, the ratio join, and — through
     // the returned frame — every downstream score pass), which would
-    // otherwise each replay the corpus-wide gram window. The
+    // otherwise each replay the corpus-wide gram pass. The
     // trainBigramModel multi-consumer fix, same shape (measured r8:
     // unpinned, q_dsir_select_docs ran 6 gram passes / 4.4 s).
     def counts(corpus: DataFrame): DataFrame =
@@ -106,21 +106,27 @@ object Dsir {
           lit(tR + smoothing * buckets))).as("log_ratio"))
   }
 
-  /** One-gram-pass twin of [[trainImportanceRatios]] + [[dsirScores]] for
-    * the common query shape where the TARGET is a row filter of the raw
-    * corpus (r16, guide §2.4/§1.2): the generic pair of calls ran the
-    * tokenize + Karp–Rabin + bigram-window gram pipeline THREE times
-    * (target counts, raw counts, scoring — ProbeStages r16: three
-    * single-task map stages of 130/203/280 ms at sf0.1, 16 sequential
-    * jobs). Here the corpus explodes ONCE into a pinned (doc_id,
-    * is_target, bucket) frame and the target counts, raw counts and the
-    * scoring join all read the leaf. Float-exact by construction: the
-    * count longs, the totals, the log-ratio expression tree and the
-    * per-doc sum's partitioning/order (the same doc-keyed window
-    * exchange feeds the same groupBy) are identical to the two-call
-    * path, and DsirSpec pins the equivalence. Private: an optimization
-    * entry point for the driver query, not new API surface. */
-  private[graft] def dsirScoresSelfTrained(
+  /** [[trainImportanceRatios]] + [[dsirScores]] in one gram pass, for the
+    * common shape where the TARGET is a row filter of the raw corpus and
+    * the raw corpus is what gets scored: `isTarget` marks the target
+    * rows, and both models train on `raw` itself. Use it whenever the
+    * target is a subset of the scored corpus; use the two-call form when
+    * the target is a separate frame, or to score other frames (or
+    * several) with one trained ratio table.
+    *
+    * The pair of calls runs the tokenize + Karp–Rabin + bigram gram
+    * pipeline THREE times (target counts, raw counts, scoring —
+    * ProbeStages r16: three single-task map stages of 130/203/280 ms at
+    * sf0.1, 16 sequential jobs). Here the corpus explodes ONCE into a
+    * pinned (doc_id, is_target, bucket) frame and the target counts, raw
+    * counts and the scoring join all read the leaf. Float-exact against
+    * the two-call path: the count longs, the totals and the log-ratio
+    * expression tree are identical, and each doc's log ratios are summed
+    * in its own gram order by the map-side partial aggregate of the task
+    * that walked its row (one row per id — rows that share an id may
+    * merge their partial sums in either order). DsirSpec pins the
+    * equivalence. */
+  def dsirScoresSelfTrained(
       raw: DataFrame,
       isTarget: Column,
       idCol: String = "doc_id",

@@ -2,6 +2,8 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.expr.GramWalk
+import graft.expr.GramPayload.Fnv64
 
 /** ROUGE-L between paired texts (Lin 2004, "ROUGE: A Package for
   * Automatic Evaluation of Summaries" §3.1, sentence-level LCS) — the
@@ -72,7 +74,7 @@ object Rouge {
     *   R = hit / Σ_g cnt_ref(g),  P = hit / Σ_g cnt_cand(g)
     *
     * n-gram keys are 64-bit hashes from one native
-    * [[graft.expr.TokenGramHashes]] pass per side — no (pair, pos) sort,
+    * [[graft.expr.GramWalk]] `Fnv64` pass per side — no (pair, pos) sort,
     * no gram string; hashing only relabels the count groups, so
     * hit/c_ngrams/r_ngrams equal the string-gram counts absent a 64-bit
     * collision (RougeSpec checks a plain-Scala string-gram reference).
@@ -100,7 +102,7 @@ object Rouge {
         filter(split(lower(trim(col(refCol))), "\\s+"), t => length(t) > 0).as("__rtoks")))
     def occ(tokCol: String, cand: Boolean): DataFrame = toksBoth
       .select(col(idCol),
-        explode(graft.expr.TokenGramHashes.tokenGramHashes(col(tokCol), n)).as("g"),
+        explode(GramWalk.grams(col(tokCol), Fnv64(n))).as("g"),
         lit(if (cand) 1L else 0L).as("c"), lit(if (cand) 0L else 1L).as("r"))
     val joined = occ("__ctoks", cand = true).unionAll(occ("__rtoks", cand = false))
       .groupBy(col(idCol), col("g"))

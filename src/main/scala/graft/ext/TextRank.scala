@@ -1,8 +1,9 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.expr.GramWalk
+import graft.expr.GramPayload.Tuple
 
 /** TextRank keyword extraction (Mihalcea & Tarau 2004): weighted
   * PageRank over the corpus-wide term co-occurrence graph. The
@@ -15,9 +16,10 @@ import org.apache.spark.sql.functions._
   * whitespace convention, filtered to length ≥ `minTermLen` — the
   * POS-filter stand-in); an undirected edge {a, b} with weight =
   * co-occurrence count joins terms appearing within `window` positions
-  * of each other in the FILTERED token sequence of any document
-  * (self-pairs from a repeated word are dropped). Scores follow the
-  * weighted-PageRank recursion of the paper, damping d:
+  * of each other in the FILTERED token sequence of any document row
+  * (self-pairs from a repeated word are dropped; each row is its own
+  * token sequence — rows are never concatenated, whatever their ids).
+  * Scores follow the weighted-PageRank recursion of the paper, damping d:
   *
   *   s(v) ← (1 − d) + d · Σ_{u ~ v} w(u,v) / Σ_x w(u,x) · s(u)
   *
@@ -28,10 +30,11 @@ import org.apache.spark.sql.functions._
   * next iteration regardless of float summation order.
   *
   * Spark shape, and why it scales:
-  *   - pair extraction is ONE (doc, pos)-partitioned window pass: the
-  *     `window` forward neighbors are gathered per row as an array of
-  *     `lead`s and exploded — no positional self-join, work linear in
-  *     window · tokens;
+  *   - pair extraction is map-only: the length filter runs on each doc's
+  *     token array, then ONE [[graft.expr.GramWalk]] `Tuple(window + 1)`
+  *     hands every surviving term its `window` forward neighbors, which
+  *     are exploded — no window exchange, no per-doc sort, no positional
+  *     self-join, work linear in window · tokens;
   *   - the undirected edge list is a map-combinable groupBy on the
   *     canonical (least, greatest) pair; it is then mirrored into both
   *     directions and joined with per-source weight sums — all term- or
@@ -60,19 +63,16 @@ object TextRank {
     * orientations of every undirected edge, with the source's total
     * incident weight attached (the PageRank normalizer). */
   def cooccurrenceEdges(docs: DataFrame, window: Int = 2, minTermLen: Int = 2,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     require(window >= 1, s"window must be >= 1, got $window")
     require(minTermLen >= 1, s"minTermLen must be >= 1, got $minTermLen")
-    val seq0 = docs
+    // the length filter runs BEFORE the walk: neighbors are counted in
+    // the filtered sequence
+    val pairs = docs
       .filter(col(textCol).isNotNull)
-      .select(col(idCol).as("doc_id"),
-        posexplode(Dedup.tokens(col(textCol))).as(Seq("pos", "term")))
-      .filter(length(col("term")) >= minTermLen)
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    // the `window` forward neighbors as one array → one window pass
-    val pairs = seq0
-      .withColumn("ys", array((1 to window).map(j => lead(col("term"), j).over(w)): _*))
-      .select(col("term").as("x"), explode(col("ys")).as("y"))
+      .select(filter(Dedup.tokens(col(textCol)), t => length(t) >= minTermLen).as("toks"))
+      .select(explode(GramWalk.grams(col("toks"), Tuple(window + 1))).as("t"))
+      .select(col("t")(0).as("x"), explode(slice(col("t"), 2, window)).as("y"))
       .filter(col("y").isNotNull && col("x") =!= col("y"))
     val und = pairs
       .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
@@ -87,11 +87,11 @@ object TextRank {
     * weighted-PageRank steps over [[cooccurrenceEdges]]. */
   def textRankScores(docs: DataFrame, window: Int = 2, iters: Int = 10,
       damping: Double = 0.85, minTermLen: Int = 2,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
     val edges = graft.core.Ckpt.pin(
-      cooccurrenceEdges(docs, window, minTermLen, idCol, textCol)
+      cooccurrenceEdges(docs, window, minTermLen, textCol)
         .withColumn("ratio", col("w") / col("out_w"))
         .select("src", "dst", "ratio"))
     var scores = edges.select(col("src").as("term")).distinct()
@@ -121,9 +121,9 @@ object TextRank {
     * (score descending — already 1e-6-quantized — then term ascending). */
   def topKeywords(docs: DataFrame, k: Int, window: Int = 2, iters: Int = 10,
       damping: Double = 0.85, minTermLen: Int = 2,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    textRankScores(docs, window, iters, damping, minTermLen, idCol, textCol)
+    textRankScores(docs, window, iters, damping, minTermLen, textCol)
       .orderBy(col("rank_score").desc, col("term").asc)
       .limit(k)
   }

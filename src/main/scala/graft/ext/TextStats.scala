@@ -2,6 +2,8 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.expr.GramWalk
+import graft.expr.GramPayload.{Fnv64, Joined, KarpRabin, Tuple}
 
 /** Text analysis for training-data pipelines (SURVEY §7.4): token counting,
   * quality scoring, language identification, and document fingerprinting.
@@ -159,7 +161,7 @@ object TextStats {
     *     docs too short to form the n-gram.
     *
     * Shape: a projection — no shuffle at all. Every stat is per-doc, so
-    * one native [[graft.expr.TokenGramHashes]] pass per gram order gives
+    * one native [[graft.expr.GramWalk]] `Fnv64` pass per gram order gives
     * each doc's 64-bit gram keys: distinct counts read `array_distinct`,
     * and the top-bigram multiplicity is the longest run of the SORTED
     * key array, a linear fold whose first argument is evaluated once per
@@ -188,8 +190,8 @@ object TextStats {
         },
         acc => acc.getField("mx"))
     val arr = base.select(col("doc_id"), size(col("toks")).as("n_tokens"),
-      graft.expr.TokenGramHashes.tokenGramHashes(col("toks"), 2).as("g2"),
-      graft.expr.TokenGramHashes.tokenGramHashes(col("toks"), 3).as("g3"))
+      GramWalk.grams(col("toks"), Fnv64(2)).as("g2"),
+      GramWalk.grams(col("toks"), Fnv64(3)).as("g3"))
     val stats = arr.select(col("doc_id"), col("n_tokens"),
       size(col("g3")).as("t_n"), size(array_distinct(col("g3"))).as("t_d"),
       size(col("g2")).as("b_n"), maxRun(col("g2")).as("b_mx"))
@@ -209,12 +211,15 @@ object TextStats {
     * boilerplate/template dominance in scraped ones; distinct-1 is the
     * classic type–token ratio.
     *
-    * Shape: ONE [[graft.expr.TokenNGrams]] walk over each doc's token
-    * array emits every (n, gram) STRING — the single-space join of n
-    * consecutive non-empty tokens (an empty/whitespace-only doc splits to
-    * [""], whose phantom '' unigram is skipped so totals count real
+    * Shape: empty tokens are removed (`array_remove(toks, "")` — an
+    * empty/whitespace-only doc splits to [""], and a doc with leading or
+    * trailing tabs/newlines to ["", …, ""], since trim strips spaces
+    * only; their phantom '' tokens are skipped so totals count real
     * tokens only — the rouge/chrf empty-token convention, mirrored with
-    * list_filter in the oracle). The gram stream is map-only until the
+    * list_filter in the oracle), then ONE [[graft.expr.GramWalk]]
+    * (`Joined(1, 3)`) over each doc's surviving tokens emits every
+    * (n, gram) STRING — the single-space join of n consecutive
+    * non-empty tokens. The gram stream is map-only until the
     * (group, n, gram) partial-agg count and the (group, n) rollup: no
     * window exchange, no per-doc sort. The gram-keyed exchange is the one
     * corpus-wide shuffle — the same shuffle any EXACT distinct pays; at
@@ -228,9 +233,8 @@ object TextStats {
       textCol: String = "text"): org.apache.spark.sql.DataFrame = {
     val g = docs
       .select(col(groupCol).cast("string").as("group"),
-        Dedup.tokens(col(textCol)).as("toks"))
-      .select(col("group"),
-        explode(graft.expr.TokenNGrams.tokenNGrams(col("toks"), 3)).as("ng"))
+        array_remove(Dedup.tokens(col(textCol)), "").as("toks"))
+      .select(col("group"), explode(GramWalk.grams(col("toks"), Joined(1, 3))).as("ng"))
       .select(col("group"), col("ng.n").as("n"), col("ng.gram").as("gram"))
     g.groupBy("group", "n", "gram").agg(count(lit(1)).as("c"))
       .groupBy("group", "n")
@@ -265,8 +269,8 @@ object TextStats {
     * Gram surrogate: each gram enters the sketch as its Karp–Rabin hash
     * ([[rollingHash]]'s fold `h ← (h·257 + codePoint) mod P` over the
     * space-joined gram string, P = 10⁹+7), computed by ONE
-    * [[graft.expr.KarpRabinNGramHashes]] walk per doc — no gram string is
-    * built. Distinct grams that share a surrogate merge before the
+    * [[graft.expr.GramWalk]] (`KarpRabin(3)`) per doc — no gram string
+    * is built. Distinct grams that share a surrogate merge before the
     * sketch: in a value space of P that drops about n/(2P) of n distinct
     * grams — ~0.05% at a million distinct grams per (group, n), about
     * 2.1× the ~0.02% of the 2³¹-folded xxhash64 draw this operator used
@@ -275,7 +279,8 @@ object TextStats {
     * exactly, so q_distinct_ngrams_approx_docs hard-oracles the SKETCH
     * itself — every gram hash, bucket, bin()-bitlen rank, register, the
     * harmonic estimator and its linear-counting branch — not just its
-    * error bound. Empty tokens are skipped, as in the exact path. */
+    * error bound. Empty tokens are removed before the walk, as in the
+    * exact path. */
   def distinctNgramRatioApprox(
       docs: org.apache.spark.sql.DataFrame,
       groupCol: String = "lang",
@@ -284,10 +289,8 @@ object TextStats {
     require(b >= 4 && b <= 16, s"b must be in [4,16], got $b")
     val hashed = docs
       .select(col(groupCol).cast("string").as("group"),
-        Dedup.tokens(col(textCol)).as("toks"))
-      .select(col("group"),
-        explode(graft.expr.KarpRabinNGramHashes.krNGramHashes(col("toks"), 3))
-          .as("pk"))
+        array_remove(Dedup.tokens(col(textCol)), "").as("toks"))
+      .select(col("group"), explode(GramWalk.grams(col("toks"), KarpRabin(3))).as("pk"))
       // unpack (n, gh) from the n<<32|hash encoding (hash < 10^9+7 < 2^32)
       .select(col("group"),
         shiftright(col("pk"), 32).cast("int").as("n"),
@@ -382,7 +385,7 @@ object TextStats {
     * (partial-agg friendly, gram-keyed shuffles only). */
   def trainBigramModel(corpus: DataFrame,
       textCol: String = "text"): (DataFrame, DataFrame, Long) = {
-    // bigram pairs from ONE TokenPairs walk per doc (no per-doc id, no
+    // bigram pairs from ONE GramWalk Tuple(2) per doc (no per-doc id, no
     // doc-keyed sort + lead window — TextExtSpec pins row-equality
     // against that shape); the trailing (last-token, NULL) successor
     // marker drops here exactly as the old lead-window null did.
@@ -391,10 +394,9 @@ object TextStats {
     // re-run the corpus-wide pair aggregate — same multi-consumer issue
     // as the LSH signature frame, same fix
     val bi = graft.core.Ckpt.pin(
-      corpus.select(explode(
-          graft.expr.TokenPairs.tokenPairs(Dedup.tokens(col(textCol)))).as("p"))
-        .filter(col("p.w2").isNotNull)
-        .groupBy(col("p.w1").as("w1"), col("p.w2").as("w2"))
+      corpus.select(explode(GramWalk.grams(Dedup.tokens(col(textCol)), Tuple(2))).as("p"))
+        .filter(col("p")(1).isNotNull)
+        .groupBy(col("p")(0).as("w1"), col("p")(1).as("w2"))
         .agg(count(lit(1)).as("c12")))
     val uni = graft.core.Ckpt.pin(bi.groupBy("w1").agg(sum("c12").as("c1")))
     (bi, uni, uni.count())
@@ -408,8 +410,9 @@ object TextStats {
     * are cut before scoring (the reference implementation's min-count
     * gate).
     *
-    * ONE corpus scan: the (w, lead(w)) pair-count frame (doc-final
-    * tokens keep a NULL successor marker) is pinned and serves all three
+    * ONE corpus scan: the (w, next w) pair-count frame from one
+    * [[graft.expr.GramWalk]] `Tuple(2)` per doc (doc-final tokens keep a
+    * NULL successor marker) is pinned and serves all three
     * statistics — c_ab is the non-null rows, EXACT unigram counts c_a
     * are the per-w1 rollup (every token appears exactly once as a left
     * element, null marker included), and N is the global rollup of the
@@ -423,15 +426,14 @@ object TextStats {
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
     require(delta >= 0, s"delta must be >= 0, got $delta")
     require(topN >= 1, s"topN must be >= 1, got $topN")
-    // bigram pairs from ONE TokenPairs walk per doc (the trainBigramModel
+    // bigram pairs from ONE Tuple(2) walk per doc (the trainBigramModel
     // zero-window shape; pairs never cross docs by construction, so the
     // per-doc id + window partition disappear with the sort). The
     // trailing (last-token, NULL) marker is KEPT — the exact unigram
     // rollup below counts every token exactly once as a left element.
     val pairs = graft.core.Ckpt.pin(
-      corpus.select(explode(
-          graft.expr.TokenPairs.tokenPairs(Dedup.tokens(col(textCol)))).as("p"))
-        .groupBy(col("p.w1").as("w1"), col("p.w2").as("w2"))
+      corpus.select(explode(GramWalk.grams(Dedup.tokens(col(textCol)), Tuple(2))).as("p"))
+        .groupBy(col("p")(0).as("w1"), col("p")(1).as("w2"))
         .agg(count(lit(1)).as("c12")))
     val c1 = pairs.groupBy(col("w1")).agg(sum("c12").as("c1"))
     val nTok = pairs.agg(sum("c12").as("n_tokens"))
@@ -464,11 +466,11 @@ object TextStats {
       smoothK: Double = 0.1): DataFrame = {
     val (bi, uni, vocab) = model
     require(smoothK > 0, s"smoothK must be > 0, got $smoothK")
-    // doc bigrams via the same TokenPairs zero-window walk as training
+    // doc bigrams via the same Tuple(2) zero-window walk as training
     docs.select(col(idCol).as("doc_id"),
-        explode(graft.expr.TokenPairs.tokenPairs(Dedup.tokens(col(textCol)))).as("p"))
-      .filter(col("p.w2").isNotNull)
-      .select(col("doc_id"), col("p.w1").as("w"), col("p.w2").as("w2"))
+        explode(GramWalk.grams(Dedup.tokens(col(textCol)), Tuple(2))).as("p"))
+      .filter(col("p")(1).isNotNull)
+      .select(col("doc_id"), col("p")(0).as("w"), col("p")(1).as("w2"))
       .join(bi.withColumnRenamed("w1", "w").withColumnRenamed("c12", "__c12"),
         Seq("w", "w2"), "left")
       .join(uni.withColumnRenamed("w1", "w").withColumnRenamed("c1", "__c1"), Seq("w"), "left")
@@ -487,7 +489,7 @@ object TextStats {
     * counts. All frames are gram-keyed aggregates of the bigram type
     * table (corpus-sized shuffles only at training, model-sized at
     * scoring). Words are keyed by their 64-bit token hash
-    * ([[graft.expr.TokenGramHashes]], k = 1), not by the token string:
+    * ([[graft.expr.GramWalk]] `Fnv64(1)`), not by the token string:
     * `w1`/`w2` are longs, and only [[kneserNeyLogLikelihood]] reads them. */
   final case class KnModel(bi: DataFrame, ctx: DataFrame, cont: DataFrame,
       bigramTypes: Long, vocab: Long, discount: Double)
@@ -526,7 +528,7 @@ object TextStats {
   /** Adjacent-token bigram position stream shared by the Kneser-Ney
     * trainer and scorer: one row per token with (w1, w2 = successor or
     * null at the doc tail), plus the passed-through key columns. Keys
-    * are per-token 64-bit hashes ([[graft.expr.TokenGramHashes]], k = 1 —
+    * are per-token 64-bit hashes ([[graft.expr.GramWalk]] `Fnv64(1)` —
     * one hash per token INCLUDING empty tokens, preserving the split
     * convention) zipped against their own 1-shifted slice: arrays_zip
     * pads the shorter slice with null exactly at the doc tail, so no
@@ -534,8 +536,7 @@ object TextStats {
   private def knPositions(src: DataFrame, textCol: String,
       keyCols: Seq[String] = Seq.empty): DataFrame = {
     val keys = keyCols.map(col)
-    src.select(keys :+ graft.expr.TokenGramHashes.tokenGramHashes(
-        Dedup.tokens(col(textCol)), 1).as("__hs"): _*)
+    src.select(keys :+ GramWalk.grams(Dedup.tokens(col(textCol)), Fnv64(1)).as("__hs"): _*)
       .withColumn("__nx",
         slice(col("__hs"), lit(2), greatest(size(col("__hs")) - 1, lit(0))))
       .select(keys :+ explode(arrays_zip(col("__hs"), col("__nx"))).as("__z"): _*)
@@ -628,8 +629,7 @@ object TextStats {
   private def sbPositions(src: DataFrame, textCol: String,
       keyCols: Seq[String] = Seq.empty): DataFrame = {
     val keys = keyCols.map(col)
-    src.select(keys :+ graft.expr.TokenGramHashes.tokenGramHashes(
-        Dedup.tokens(col(textCol)), 1).as("__hs"): _*)
+    src.select(keys :+ GramWalk.grams(Dedup.tokens(col(textCol)), Fnv64(1)).as("__hs"): _*)
       .withColumn("__n2",
         slice(col("__hs"), lit(2), greatest(size(col("__hs")) - 1, lit(0))))
       .withColumn("__n3",
@@ -745,7 +745,7 @@ object TextStats {
     * exploded token stream by doc_id — a corpus-wide exchange
     * this operator doesn't otherwise need (unlike minhash, whose groupBy
     * wants that partitioning anyway). The native codegen'd
-    * [[graft.expr.TokenGramHashes]] expression builds the sliding 64-bit
+    * [[graft.expr.GramWalk]] `Fnv64` payload builds the sliding 64-bit
     * FNV-1a gram hashes straight from the token array in one fused pass
     * (a built-in indexed lambda over the derived array would re-evaluate
     * the split per element — quadratic in doc length — and a Scala UDF
@@ -760,8 +760,7 @@ object TextStats {
   private def tokenGramHashRows(df: org.apache.spark.sql.DataFrame,
       idCol: String, textCol: String, k: Int): org.apache.spark.sql.DataFrame =
     df.select(col(idCol).as("doc_id"),
-      explode(graft.expr.TokenGramHashes.tokenGramHashes(
-        Dedup.tokens(col(textCol)), k)).as("sh"))
+      explode(GramWalk.grams(Dedup.tokens(col(textCol)), Fnv64(k))).as("sh"))
 
   /** Per-document gram-duplication profile — the corpus-duplication
     * DIAGNOSTIC companion to the span/near-dup REMOVAL operators (the
@@ -771,7 +770,7 @@ object TextStats {
     * that is. Returns (doc_id, n_grams, n_shared, shared_frac); docs
     * shorter than k tokens have no grams and report (0, 0, 0.0).
     *
-    * Plan shape: the fused [[graft.expr.TokenGramHashes]] gram stream
+    * Plan shape: the fused [[graft.expr.GramWalk]] `Fnv64` gram stream
     * (shuffle-free), per-doc DISTINCT grams, one gram-keyed
     * doc-frequency aggregate (the only corpus-wide shuffle — it carries
     * (gram, doc) pairs, partial-aggregated map-side), a gram-keyed join
@@ -907,8 +906,8 @@ object TextStats {
     val mightHit = org.apache.spark.sql.functions.udf { (hashes: Seq[Long]) =>
       hashes != null && hashes.exists(bfB.value.mightContain(_))
     }
-    val candidates = corpus.filter(mightHit(graft.expr.TokenGramHashes.tokenGramHashes(
-      Dedup.tokens(col(textCol)), k)))
+    val candidates =
+      corpus.filter(mightHit(GramWalk.grams(Dedup.tokens(col(textCol)), Fnv64(k))))
     // exact verify over candidates only — removes Bloom false positives
     corpus.join(contaminatedDocIds(candidates, benchmark, idCol, textCol, k),
       Seq(idCol), "left_anti")
@@ -938,8 +937,7 @@ object TextStats {
     // flagged there) — without the guard this UDF NPEs on real corpora.
     val clean = udf { (hashes: Seq[Long]) =>
       hashes == null || !hashes.exists(benchGrams.contains) }
-    corpus.filter(clean(graft.expr.TokenGramHashes.tokenGramHashes(
-      Dedup.tokens(col(textCol)), k)))
+    corpus.filter(clean(GramWalk.grams(Dedup.tokens(col(textCol)), Fnv64(k))))
   }
 
   // ---- language identification --------------------------------------------
@@ -1060,24 +1058,25 @@ object TextStats {
     * hyphenated "bad-phrase" is ONE token and does not match a
     * two-token entry; punct-only tokens normalize empty and break
     * adjacency). Emits (idCol, n_flagged) for docs with
-    * ≥ 1 hit, counting every occurrence of every entry.
+    * ≥ 1 hit, counting every occurrence of every entry. Each input row
+    * is its own token sequence: a phrase never spans two rows, even rows
+    * that share an id (their hits still sum into one count).
     *
-    * Scale shape: ONE corpus token scan — Lmax−1 window `lead`s on the
-    * (doc, pos) exchange assemble, per position, one candidate gram for
-    * EACH distinct entry length (an array of ≤ |lengths| structs,
-    * null-marked where the window runs off the doc), a single explode
+    * Scale shape: ONE corpus token scan — each doc's tokens are
+    * normalized in place, one [[graft.expr.GramWalk]] `Tuple(Lmax)` hands
+    * every position its next Lmax tokens (null past the doc end), and
+    * from each tuple one candidate gram per distinct entry length is
+    * assembled (null where the gram runs off the doc), a single explode
     * flattens them, and a broadcast LEFT SEMI join against the
     * model-sized normalized phrase list keeps only hits (gram string
     * determines its own length — space-joined ℓ-token grams only equal
-    * ℓ-token entries). The corpus is never shuffled except by the
-    * (doc, pos) window exchange and the final per-doc count, both
-    * map-side combinable. */
+    * ℓ-token entries). The gram stream is map-only; the one shuffle is
+    * the final per-doc count, map-side combinable. */
   def phraseBlocklistHits(docs: DataFrame, idCol: String, textCol: String,
       phrases: Seq[String]): DataFrame = {
     require(phrases.nonEmpty, "blocklist must be non-empty")
     val spark = docs.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     val norm = phrases
       .map(_.trim.toLowerCase(java.util.Locale.ROOT).split("\\s+").toSeq
         .map(_.replaceAll("^[^a-z0-9]+|[^a-z0-9]+$", "")).filter(_.nonEmpty))
@@ -1086,14 +1085,11 @@ object TextStats {
     val lengths = norm.map(_.split(" ").length).distinct.sorted
     val maxL = lengths.max
     val wl = norm.toDF("__p")
-    val tok = docs
-      .select(col(idCol), posexplode(Dedup.tokens(col(textCol))).as(Seq("pos", "__t")))
-      .select(col(idCol), col("pos"), blocklistToken(col("__t")).as("__t"))
-    val wnd = Window.partitionBy(idCol).orderBy("pos")
-    val leads = (1 until maxL).map(j => lead("__t", j).over(wnd).as(s"__t$j"))
-    val withLeads = tok.select(col(idCol) +: col("pos") +: col("__t") +: leads: _*)
+    val tuples = docs
+      .select(col(idCol), transform(Dedup.tokens(col(textCol)), blocklistToken(_)).as("__ts"))
+      .select(col(idCol), explode(GramWalk.grams(col("__ts"), Tuple(maxL))).as("__t"))
     def gram(l: Int): Column = {
-      val parts = col("__t") +: (1 until l).map(j => col(s"__t$j"))
+      val parts = (0 until l).map(j => col("__t")(j))
       val full =
         if (l == 1) lit(true)
         else parts.map(_.isNotNull).reduce(_ && _)
@@ -1103,7 +1099,7 @@ object TextStats {
       val nonEmpty = parts.map(_ =!= "").reduce(_ && _)
       when(full && nonEmpty, concat_ws(" ", parts: _*))
     }
-    withLeads
+    tuples
       .select(col(idCol),
         explode(array(lengths.map(l => gram(l)): _*)).as("__g"))
       .filter(col("__g").isNotNull)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.graftbridge.Bridge
-import graft.expr.{CosineSimilarity, DotProduct, TokenGramHashes}
+import graft.expr.{CosineSimilarity, DotProduct, GramPayload, GramWalk}
 
 /** GraftExtensions: the injected cosine_sim must resolve and evaluate in
   * plain SQL. Extensions bind at session build, so the live-session path
@@ -33,7 +33,7 @@ class ExtensionsSpec extends SparkSpec {
         case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
         case other => throw new IllegalArgumentException(s"k must be literal, got $other")
       }
-      TokenGramHashes(args.head, k)
+      GramWalk(args.head, GramPayload.Fnv64(k))
     })
     val r = spark.sql(
       "SELECT size(token_gram_hashes(array('a','b','c','d'), 2)) AS n").head()

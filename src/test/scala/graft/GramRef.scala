@@ -33,9 +33,9 @@ object GramRef {
   def gramCounts(toks: Seq[String], n: Int): Map[String, Long] =
     grams(toks, n).groupMapReduce(gramString)(_ => 1L)(_ + _)
 
-  /** The 64-bit key [[graft.expr.TokenGramHashes]] gives a gram: FNV-1a
-    * over each token's UTF-8 bytes, a 0x1f separator byte after each
-    * token; a null token contributes no bytes. */
+  /** The 64-bit key the [[graft.expr.GramWalk]] `Fnv64` payload gives a
+    * gram: FNV-1a over each token's UTF-8 bytes, a 0x1f separator byte
+    * after each token; a null token contributes no bytes. */
   def gramKey(gram: Seq[String]): Long = {
     var h = 0xcbf29ce484222325L
     for (t <- gram) {
@@ -56,6 +56,24 @@ object GramRef {
   /** Karp–Rabin fold `h ← (h·257 + codePoint) mod (10⁹+7)` of a string. */
   def karpRabin(s: String): Long =
     s.codePoints().toArray.foldLeft(0L)((h, cp) => (h * 257L + cp) % 1000000007L)
+
+  /** The gram walk's slice-and-join string of a gram: its tokens joined
+    * by one space, a null token read as "". */
+  def joined(gram: Seq[String]): String = gram.map(t => if (t == null) "" else t).mkString(" ")
+
+  /** `Joined(minN, maxN)`: every (n, gram string), n-major then position. */
+  def joinedGrams(toks: Seq[String], minN: Int, maxN: Int): Seq[(Int, String)] =
+    (minN to maxN).flatMap(n => grams(toks, n).map(g => n -> joined(g)))
+
+  /** `KarpRabin(maxN)`: the Karp–Rabin fold of every gram string, packed
+    * `n << 32 | hash`, n-major then position. */
+  def krGramKeys(toks: Seq[String], maxN: Int): Seq[Long] =
+    joinedGrams(toks, 1, maxN).map { case (n, g) => (n.toLong << 32) | karpRabin(g) }
+
+  /** `Tuple(n)`: for every position, the next n elements, null past the
+    * end. */
+  def tuples(xs: Seq[Any], n: Int): Seq[Seq[Any]] =
+    xs.indices.map(i => (i until i + n).map(j => if (j < xs.length) xs(j) else null))
 
   /** Spark's `floor(x·1e6 + 0.5) / 1e6` canon. */
   def r6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6

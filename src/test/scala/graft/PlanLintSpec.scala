@@ -221,7 +221,7 @@ class PlanLintSpec extends SparkSpec {
     ("q_hll_distinct_lineitem", "pmod(l_partkey, 2147483648L)"),
     ("q_kmv_distinct_lineitem", "pmod(l_partkey, 2147483648L)"),
     // same mixHash-avalanche duplication over the STAGED gram surrogate
-    // `gh` (unpacked once from the KarpRabinNGramHashes walk in its own
+    // `gh` (unpacked once from the GramWalk KarpRabin(3) walk in its own
     // projection; only the O(1) integer mix is triplicated by
     // hllBucketRank's bucket + two rank reads)
     ("q_distinct_ngrams_approx_docs", "pmod(gh, 2147483648L)"),
@@ -284,5 +284,55 @@ class PlanLintSpec extends SparkSpec {
     val report = offenders.map { case (q, op, n, d) => s"$q [$op] ×$n: $d" }
     assert(offenders.isEmpty,
       s"duplicated expression subtrees (≥$minCount× in one operator, size ≥$minSize):\n${report.mkString("\n")}")
+  }
+
+  // ---- gram-building lint --------------------------------------------------
+  // Grams are built by the native gram walk (graft.expr.GramWalk), never by
+  // a posexplode → doc-keyed sort → `lead` window. The check reads EVERY
+  // physical plan a query executes, its eager Ckpt.pin jobs included: a
+  // pin cuts its subplan out of the final plan, where a final-plan walk
+  // would never see it.
+
+  /** The queries whose grams a `lead` window used to build. */
+  private val gramQueries = Seq("q_dedup_minhash_docs", "q_dsir_select_docs",
+    "q_textrank_docs", "q_phrase_blocklist_docs", "q_vocab_resemblance_docs")
+
+  test("no gram-building query plans a Lead window function") {
+    assume(new java.io.File(s"$sfDir/documents.parquet").exists())
+    import org.apache.spark.sql.catalyst.expressions.Lead
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val helper = new AdaptiveSparkPlanHelper {}
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe.executedPlan)
+    }
+    // the listener bus is asynchronous: a sentinel action run after the
+    // query marks the point by which every earlier plan has arrived
+    def drain(name: String): Seq[SparkPlan] = {
+      val tag = s"lint_sentinel_${name}"
+      spark.range(1).selectExpr(s"id AS $tag").collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      def seen = plans.toArray(Array.empty[SparkPlan]).exists(_.output.exists(_.name == tag))
+      while (!seen && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(seen, s"$name: the sentinel plan never reached the listener")
+      plans.toArray(Array.empty[SparkPlan]).toSeq
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val offenders = gramQueries.flatMap { name =>
+        plans.clear()
+        SparkEntry.queries(name)(spark, sfDir).collect()
+        val captured = drain(name)
+        assert(captured.size >= 2, s"$name: no query plan was captured")
+        captured.flatMap(p => helper.collectWithSubqueries(p) {
+          case w: WindowExec if w.windowExpression.exists(_.exists(_.isInstanceOf[Lead])) =>
+            s"$name: ${w.windowExpression.map(_.sql).mkString(", ").take(120)}"
+        })
+      }
+      assert(offenders.isEmpty, s"lead windows in gram-building plans:\n${offenders.mkString("\n")}")
+    } finally spark.listenerManager.unregister(listener)
   }
 }

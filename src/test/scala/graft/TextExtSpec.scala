@@ -541,7 +541,12 @@ class TextExtSpec extends SparkSpec {
     val df = Seq(
       (1L, "x", "a b a"), // 1-grams a,b,a; 2-grams "a b","b a"; 3-gram "a b a"
       (2L, "x", "a b"),   // adds a,b; "a b"
-      (3L, "y", "c c")    // y: 1-grams c,c; 2-gram "c c"; NO trigram
+      (3L, "y", "c c"),   // y: 1-grams c,c; 2-gram "c c"; NO trigram
+      // trim strips spaces only: these split to ["", "foo", "bar", ""] and
+      // ["", "foo", ""], whose empty tokens are no grams — z: 1-grams
+      // foo,bar,foo; 2-gram "foo bar"; NO trigram
+      (4L, "z", "\tfoo bar\n"),
+      (5L, "z", "\nfoo\t")
     ).toDF("doc_id", "lang", "text")
     val out = TextStats.distinctNgramRatio(df).collect()
       .map(r => (r.getAs[String]("group"), r.getAs[Int]("n")) ->
@@ -553,7 +558,9 @@ class TextExtSpec extends SparkSpec {
     assert(out(("y", 1)) == ((2L, 1L, 0.5)), s"got $out")
     assert(out(("y", 2)) == ((1L, 1L, 1.0)), s"got $out")
     assert(!out.contains(("y", 3)), s"got $out") // no trigram row for y
-    assert(out.size == 5)
+    assert(out(("z", 1)) == ((3L, 2L, 0.666667)), s"got $out")
+    assert(out(("z", 2)) == ((1L, 1L, 1.0)), s"got $out")
+    assert(out.size == 7)
   }
 
   test("distinctNgramRatioApprox: HLL tier tracks the exact path on the fixture corpus") {
@@ -584,8 +591,9 @@ class TextExtSpec extends SparkSpec {
   }
 
   /** The distinct-n fixture: the sf0.001 corpus plus edge docs — repeats,
-    * a 1-token doc, irregular spacing, unicode, null and empty text —
-    * and its collected (lang, text) rows. */
+    * a 1-token doc, irregular spacing, unicode, null and empty text, and
+    * tab/newline edges (trim strips spaces only, so those docs split with
+    * empty edge tokens) — and its collected (lang, text) rows. */
   private def distinctNgramFixture(): (org.apache.spark.sql.DataFrame, Seq[(String, String)]) = {
     val fixture = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "lang", "text")
@@ -596,7 +604,10 @@ class TextExtSpec extends SparkSpec {
       (900004L, "xx", "héllo wörld 𝔘ni code"),
       (900005L, "yy", null: String),
       (900006L, "yy", ""),
-      (900007L, "yy", "two tokens")
+      (900007L, "yy", "two tokens"),
+      (900008L, "zz", "\tfoo bar\n"),
+      (900009L, "zz", "\n\nfoo baz qux\t"),
+      (900010L, "en", "\ta b\n")
     ).toDF("doc_id", "lang", "text")
     val docs = fixture.union(extra)
     (docs, docs.collect().map(r => (r.getString(1), r.getString(2))).toSeq)
@@ -610,9 +621,10 @@ class TextExtSpec extends SparkSpec {
       .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
 
   test("distinctNgramRatioApprox: sketch equals a plain-Scala Karp–Rabin HLL reference") {
-    // ONE KarpRabinNGramHashes walk must reproduce the KR hash of every
-    // space-joined gram string — same (n, gh) multiset ⇒ same buckets,
-    // ranks, register maxima, totals and estimator branches
+    // ONE GramWalk KarpRabin(3) over the non-empty tokens must reproduce
+    // the KR hash of every space-joined gram string — same (n, gh)
+    // multiset ⇒ same buckets, ranks, register maxima, totals and
+    // estimator branches
     val (docs, texts) = distinctNgramFixture()
     val (b, m) = (12, 4096)
     val wb = 32 - b
@@ -644,9 +656,10 @@ class TextExtSpec extends SparkSpec {
   }
 
   test("distinctNgramRatio: row-exact vs a plain-Scala string-gram reference") {
-    // ONE TokenNGrams walk must reproduce the space-joined gram STRINGS
-    // exactly — same (group, n, gram) multiset ⇒ same count longs ⇒
-    // bit-identical ratios (long/long division)
+    // ONE GramWalk Joined(1, 3) over the non-empty tokens must reproduce
+    // the space-joined gram STRINGS exactly — same (group, n, gram)
+    // multiset ⇒ same count longs ⇒ bit-identical ratios (long/long
+    // division)
     val (docs, texts) = distinctNgramFixture()
     val ref = ngramsByGroup(texts).toSeq
       .map { case ((g, n), grams) =>
@@ -685,12 +698,12 @@ class TextExtSpec extends SparkSpec {
       .groupBy(col("w").as("w1"), col("w2")).agg(count(lit(1)).as("c12"))
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     val newPairs = docs
-      .select(explode(graft.expr.TokenPairs.tokenPairs(
-        graft.ext.Dedup.tokens(col("text")))).as("p"))
-      .groupBy(col("p.w1").as("w1"), col("p.w2").as("w2"))
+      .select(explode(graft.expr.GramWalk.grams(
+        graft.ext.Dedup.tokens(col("text")), graft.expr.GramPayload.Tuple(2))).as("p"))
+      .groupBy(col("p")(0).as("w1"), col("p")(1).as("w2"))
       .agg(count(lit(1)).as("c12"))
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(newPairs == refPairs, "TokenPairs changed the (w1, w2) count table")
+    assert(newPairs == refPairs, "Tuple(2) changed the (w1, w2) count table")
     // and the operator outputs themselves stay hand-check-consistent on
     // a doc set with the full edge battery (loglik doubles to 1e-9 —
     // identical count longs; only FP join/agg arrival order may differ)
